@@ -115,6 +115,9 @@ object Bench {
     val queries = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
     val samples = scala.collection.mutable.Map.empty[String, List[Double]]
+    // a query that throws is an error, never a sample: a throw after
+    // 50 ms would otherwise read as a 20x speedup. Last cause per key.
+    val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val passWalls = scala.collection.mutable.ArrayBuffer.empty[Double]
     // BENCH_ONLY runs go to a side file: a 3-query subset must never
     // overwrite the full-suite bench.json the gate compares.
@@ -137,6 +140,8 @@ object Bench {
       val jsamples: String = results.map { case (name, _, _) =>
         s"\"" + name + "\":" + samples(name).reverse.mkString("[", ",", "]")
       }.mkString("{", ",", "}")
+      val jerrors = errors.map { case (k, v) =>
+        Verify.jsonString(k) + ":" + Verify.jsonString(v) }.mkString("{", ",", "}")
       val total = results.map(_._2).sum
       val totalMin = results.map(_._3).sum
       // telemetry fields (VERDICT r13 #7): the NEXT dnf — if any — must
@@ -145,7 +150,7 @@ object Bench {
       s"""{"metric":"total","value":$total,"unit":"sec","value_min":$totalMin,""" +
         s""""queries":${jmap(results.map(r => (r._1, r._2)))},""" +
         s""""queries_min":${jmap(results.map(r => (r._1, r._3)))},""" +
-        s""""samples":$jsamples,"sf":"$sfDir",""" +
+        s""""samples":$jsamples,"sf":"$sfDir","errors":$jerrors,""" +
         s""""passes":$passes,"keys":${results.length},"deadline_hit":$deadlineHit,""" +
         s""""requested_cpus":$requested,"effective_cpus":$cpus,""" +
         s""""cgroup_quota_cores":${quota.getOrElse(-1)},""" +
@@ -175,9 +180,13 @@ object Bench {
       val t0p = System.nanoTime()
       queries.foreach { case (name, fn) => if (!deadlineHit) {
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        val dt = (System.nanoTime() - t0) / 1e9
-        samples(name) = dt :: samples.getOrElse(name, Nil)
+        try {
+          fn(spark, sfDir).count()
+          val dt = (System.nanoTime() - t0) / 1e9
+          samples(name) = dt :: samples.getOrElse(name, Nil)
+        } catch { case scala.util.control.NonFatal(e) =>
+          errors(name) = String.valueOf(e).linesIterator.nextOption().getOrElse("")
+        }
         // Dedup/similarity ops persist() intermediates (shingle sets etc.)
         // that only the returned plan's execution needs — each run creates
         // a NEW cache entry and nothing unpersists, so 300+ dead caches
@@ -209,5 +218,10 @@ object Bench {
     // The bare JSON metric line goes LAST on stdout, un-prefixed (forked
     // run uses OutputStrategy.StdoutOutput; Spark logs go to stderr).
     println(flush(pass, deadlineHit))
+    if (errors.nonEmpty) {
+      errors.foreach { case (k, v) => System.err.println(s"[bench] FAILED $k: $v") }
+      System.err.println(s"[bench] ${errors.size} of ${queries.size} query(ies) failed")
+      sys.exit(1)
+    }
   }
 }

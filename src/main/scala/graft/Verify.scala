@@ -1,9 +1,28 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json, for the DuckDB oracle compare
+  * (`scripts/check_oracle.py`). A key whose dump throws is reported at
+  * the end, one `[verify] FAILED <key>: <cause>` line each, after
+  * oracle_sql.json and the `keys= sha=` line are written; the run then
+  * exits 1.
+  */
 object Verify {
+  /** JSON string literal: escapes backslash, quote and ALL control chars
+    * (<0x20) — a tab or CR in hand-written oracle SQL would otherwise make a
+    * consumer's json.load fail and silently zero the round's correctness.
+    */
+  private[graft] def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -72,27 +91,14 @@ object Verify {
           }
         })
     }
-    futs.foreach { case (name, f) =>
-      try f.get()
-      catch { case e: java.util.concurrent.ExecutionException =>
-        System.err.println(s"[verify] $name failed: ${e.getCause.getMessage}")
-      }
+    val failed = futs.flatMap { case (name, f) =>
+      try { f.get(); None }
+      catch { case e: java.util.concurrent.ExecutionException => Some(name -> e.getCause) }
     }
     pool.shutdown()
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql.filter(kv => keep(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // key-count + sorted-key-manifest hash (VERDICT r13 #3): three
     // long-green keys silently vanished from the driver's r13
@@ -105,5 +111,14 @@ object Verify {
       .map("%02x".format(_)).mkString.take(12)
     println(s"keys=${keySet.size} sha=$sha")
     spark.stop()
+    // fail loudly: the tail of the log names every failed key and cause
+    if (failed.nonEmpty) {
+      failed.foreach { case (name, e) =>
+        System.err.println(s"[verify] FAILED $name: " +
+          String.valueOf(e).linesIterator.nextOption().getOrElse(""))
+      }
+      System.err.println(s"[verify] ${failed.size} of ${futs.size} key(s) failed")
+      sys.exit(1)
+    }
   }
 }

@@ -1,10 +1,11 @@
 package graft.serving
 
-import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import com.sun.net.httpserver.HttpExchange
+
+import graft.serving.Http.respond
 
 /** The HTTP ingest edge: `GET /log?city=…&temperature=…` validates,
   * stamps a second-precision `ts`, and hands the record to the
@@ -30,6 +31,10 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
   * `clock` is injectable so tests stamp deterministic timestamps; the
   * default is wall clock in the JVM zone (server.py:65
   * `datetime.now()`).
+  *
+  * The server binds through [[Http.bind]], which turns on TCP_NODELAY
+  * for every JDK `HttpServer` in the JVM, so back-to-back requests on one
+  * keep-alive connection are not held back by delayed ACKs.
   */
 final class IngestServer(
     spoolDir: String,
@@ -52,13 +57,6 @@ final class IngestServer(
     b.result()
   }
 
-  private def respond(x: HttpExchange, code: Int, body: String): Unit = {
-    val bytes = body.getBytes(StandardCharsets.UTF_8)
-    x.getResponseHeaders.set("Content-Type", "application/json")
-    x.sendResponseHeaders(code, bytes.length.toLong)
-    try x.getResponseBody.write(bytes) finally x.close()
-  }
-
   private def queryParam(x: HttpExchange, name: String): Option[String] =
     Option(x.getRequestURI.getRawQuery).iterator
       .flatMap(_.split('&')).map(_.split("=", 2))
@@ -78,7 +76,7 @@ final class IngestServer(
     ()
   }
 
-  private val http = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
+  private val http = Http.bind(port)
   private val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
   http.setExecutor(pool)
 

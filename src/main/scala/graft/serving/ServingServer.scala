@@ -1,13 +1,14 @@
 package graft.serving
 
-import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 import java.time.Instant
 
-import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import com.sun.net.httpserver.HttpExchange
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.serving.Http.respond
 
 /** The serving HTTP layer: a long-lived process answering the dashboard's
   * poll loop from the keyed aggregate store — the reference's
@@ -38,6 +39,10 @@ import org.apache.spark.sql.functions._
   * of connected clients); the server holds no state beyond that
   * snapshot, so replicas scale horizontally behind a balancer, all
   * reading the same store.
+  *
+  * The server binds through [[Http.bind]], which turns on TCP_NODELAY
+  * for every JDK `HttpServer` in the JVM (a dashboard's keep-alive polls
+  * are otherwise held back ~40 ms by delayed ACKs).
   */
 final class ServingServer(
     source: () => DataFrame,
@@ -122,13 +127,6 @@ final class ServingServer(
     s"""{"cities":[$cs],"data":{$data}}"""
   }
 
-  private def respond(x: HttpExchange, code: Int, body: String): Unit = {
-    val bytes = body.getBytes(StandardCharsets.UTF_8)
-    x.getResponseHeaders.set("Content-Type", "application/json")
-    x.sendResponseHeaders(code, bytes.length.toLong)
-    try x.getResponseBody.write(bytes) finally x.close()
-  }
-
   private def queryParam(x: HttpExchange, name: String): Option[String] =
     Option(x.getRequestURI.getRawQuery).iterator
       .flatMap(_.split('&')).map(_.split("=", 2))
@@ -136,7 +134,7 @@ final class ServingServer(
         java.net.URLDecoder.decode(v, StandardCharsets.UTF_8)
       }
 
-  private val http = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
+  private val http = Http.bind(port)
   private val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
   http.setExecutor(pool)
 

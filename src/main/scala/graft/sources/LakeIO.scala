@@ -85,8 +85,7 @@ object LakeIO {
       .option("compression", "zstd")
       .parquet(stage)
     // a violation aborts BEFORE the swap: existing data stays intact
-    try stagedRows(stage).foreach(r => enforceConstraints(path, r, what))
-    catch { case e: Throwable => rmDir(stage); throw e }
+    validateStage(path, stage, what)
     val root = new java.io.File(path)
     root.mkdirs()
     // drop every prior-era partition dir (any partCol — the table may
@@ -452,7 +451,7 @@ object LakeIO {
           case Some(schema) => reader.schema(schema).parquet(files: _*)
           case None         => reader.parquet(files: _*)
         }
-        enforceConstraints(path, staged, s"publish of stage '$stageId'")
+        enforceConstraints(path, Some(staged), s"publish of stage '$stageId'")
       }
       val v = ManifestFileIndex.commitDelta(path, "ts_hour", baseV, added, Set.empty)
       consumed.delete()
@@ -632,15 +631,17 @@ object LakeIO {
   /** Validate incoming rows against every table constraint in ONE pass
     * (one aggregate over the batch, all predicates as parallel
     * conditional sums). Free for unconstrained tables: the metadata
-    * lookup is a single file-existence check and `rows` is never forced.
+    * lookup is a single file-existence check and `rows` is never forced,
+    * so no DataFrame over them is even built. `None` rows are an empty
+    * batch, which satisfies every CHECK vacuously.
     */
-  private def enforceConstraints(path: String, rows: => DataFrame,
+  private def enforceConstraints(path: String, rows: => Option[DataFrame],
       what: String): Unit = {
     val cs = org.apache.spark.sql.graft.ManifestFileIndex.listConstraints(path)
-    if (cs.nonEmpty) {
+    if (cs.nonEmpty) rows.foreach { r =>
       val aggs = cs.zipWithIndex.map { case ((_, x), i) =>
         sum(when(expr(x) <=> lit(false), 1L).otherwise(0L)).as(s"_c$i") }
-      val row = rows.agg(aggs.head, aggs.tail: _*).head()
+      val row = r.agg(aggs.head, aggs.tail: _*).head()
       cs.zipWithIndex.foreach { case ((n, x), i) =>
         val v = if (row.isNullAt(i)) 0L else row.getLong(i) // empty batch → null sum
         if (v > 0L) sys.error(
@@ -649,6 +650,15 @@ object LakeIO {
       }
     }
   }
+
+  /** [[enforceConstraints]] over the staged parquet bytes of a write;
+    * on violation the stage is deleted, so the table is untouched. The
+    * stage is read only when the table has a constraint: inferring its
+    * schema and discovering its partitions costs a Spark job per commit.
+    */
+  private def validateStage(path: String, stage: String, what: String): Unit =
+    try enforceConstraints(path, stagedRows(stage), what)
+    catch { case e: Throwable => rmDir(stage); throw e }
 
   /** The staged parquet bytes as a DataFrame, or None when the stage
     * holds no part-files. An EMPTY batch (update-mode triggers emit them;
@@ -682,10 +692,7 @@ object LakeIO {
       prefix: String, validate: Boolean = true):
       Seq[org.apache.spark.sql.graft.ManifestFileIndex.Entry] = {
     import org.apache.spark.sql.graft.ManifestFileIndex
-    if (validate) {
-      try stagedRows(stage).foreach(r => enforceConstraints(path, r, "write"))
-      catch { case e: Throwable => rmDir(stage); throw e }
-    }
+    if (validate) validateStage(path, stage, "write")
     val stageDir = new java.io.File(stage)
     // moves are cheap renames and stay serial; the footer-stats reads
     // (the actual cost at hundreds of partitions) run concurrently via
@@ -1518,9 +1525,7 @@ object LakeIO {
     // commits (foreachBatch surfaces the error; the table is untouched).
     // stagedRows is None for an EMPTY micro-batch — update-mode triggers
     // emit them routinely; validation must not kill the stream on a no-op
-    try stagedRows(stage).foreach(r =>
-      enforceConstraints(path, r, "appendExactlyOnce"))
-    catch { case e: Throwable => rmDir(stage); throw e }
+    validateStage(path, stage, "appendExactlyOnce")
     val stageDir = new java.io.File(stage)
     val movedB = Option(stageDir.listFiles()).getOrElse(Array.empty)
       .filter(d => d.isDirectory && d.getName.startsWith("ts_hour="))

@@ -1,6 +1,10 @@
 package graft.sources
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-provided testdata tables (TESTDATA.md).
   *
@@ -18,15 +22,37 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Note: `documents` and `embeddings` are present on disk at every scale
   * factor but undocumented in TESTDATA.md (see FIXTURES.md §B for their
   * verified schemas).
+  *
+  * Schema memo: `spark.read.parquet(path)` runs a footer-read Spark job
+  * on every call to infer the schema. [[load]] infers each file's schema
+  * once and reads with it passed in, so a repeat load launches no job.
+  * The memo key is the file's qualified path, length and modification
+  * time (its Hadoop `FileStatus`), plus the session's parquet read
+  * confs (`spark.sql.parquet.*`, `spark.sql.legacy.parquet.*`), which
+  * change how a footer decodes (e.g. `nanosAsLong` in [[events]]). A
+  * rewritten file gets a new key; the key holds no session, so every
+  * session of the JVM shares the memo.
   */
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  private final case class SchemaKey(path: String, length: Long,
+      modified: Long, readConfs: Map[String, String])
+  private val schemas = new ConcurrentHashMap[SchemaKey, StructType]()
+
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     require(names.contains(name), s"unknown table: $name")
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    val path = s"$sfDir/$name.parquet"
+    val p = new Path(path)
+    val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p)
+    val readConfs = spark.conf.getAll.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
+    }
+    val key = SchemaKey(st.getPath.toString, st.getLen, st.getModificationTime, readConfs)
+    val schema = schemas.computeIfAbsent(key, _ => spark.read.parquet(path).schema)
+    spark.read.schema(schema).parquet(path)
   }
 
   /** `events.ts` normalizer — the physical encoding has differed across

@@ -67,9 +67,14 @@ object JdbcUpsert {
   }
 
   /** Upsert one micro-batch: partition-side batched MERGE, one commit per
-    * partition (a failed partition rolls back atomically and the engine
-    * retries the task — MERGE is idempotent by key, so at-least-once
-    * task attempts converge).
+    * partition. A failed partition rolls back atomically. On a cluster
+    * the engine then retries the task, and since MERGE is idempotent by
+    * key, at-least-once task attempts converge. Under `local[n]` a
+    * failed task is not retried (local mode ignores
+    * `spark.task.maxFailures`; only `local[n,f]` allows f attempts):
+    * the job fails, and in a streaming query the query stops with it; a
+    * restart replays the batch from its checkpoint, which the same
+    * idempotence makes safe.
     */
   def upsert(batch: DataFrame, url: String, table: String): Unit = {
     val sql = MergeSql.format(table)

@@ -80,6 +80,43 @@ class IngestServerSpec extends AnyFunSuite {
     } finally srv.close()
   }
 
+  test("back-to-back requests on one keep-alive connection are not held back") {
+    val dir = freshDir("keepalive")
+    val srv = new IngestServer(dir)
+    val sock = new java.net.Socket("127.0.0.1", srv.boundPort)
+    try {
+      val out = sock.getOutputStream
+      val in = new java.io.DataInputStream(
+        new java.io.BufferedInputStream(sock.getInputStream))
+      def line(): String = {
+        val b = new StringBuilder
+        var c = in.read()
+        while (c != '\n' && c != -1) { if (c != '\r') b.append(c.toChar); c = in.read() }
+        b.result()
+      }
+      // one request on the open connection; returns (status line, ms)
+      def roundTrip(i: Int): (String, Double) = {
+        val t0 = System.nanoTime()
+        out.write((s"GET /log?city=C$i&temperature=$i HTTP/1.1\r\n" +
+          "Host: 127.0.0.1\r\n\r\n").getBytes("US-ASCII"))
+        out.flush()
+        val status = line()
+        val headers = Iterator.continually(line()).takeWhile(_.nonEmpty).toSeq
+        val length = headers.collectFirst {
+          case h if h.toLowerCase.startsWith("content-length:") => h.drop(15).trim.toInt
+        }.get
+        in.readFully(new Array[Byte](length))
+        (status, (System.nanoTime() - t0) / 1e6)
+      }
+      // the producer's batch shape: 10 records back to back
+      val runs = (1 to 10).map(roundTrip)
+      assert(runs.forall(_._1.startsWith("HTTP/1.1 200")))
+      val median = runs.map(_._2).sorted.apply(runs.size / 2)
+      assert(median < 20.0, s"per-request ms: ${runs.map(_._2).mkString(", ")}")
+      assert(new java.io.File(dir).listFiles().count(_.getName.endsWith(".json")) == 10)
+    } finally { sock.close(); srv.close() }
+  }
+
   test("full reference loop: HTTP ingest -> file-drop stream -> windowed agg -> Derby -> dashboard HTTP") {
     val dir = freshDir("loop")
     val derby = freshDir("loop_db")

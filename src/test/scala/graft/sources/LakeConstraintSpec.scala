@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.graft.JobCount
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ManifestFileIndex
 
@@ -43,6 +44,32 @@ class LakeConstraintSpec extends AnyFunSuite {
     assert(spark.read.format("graft-lake").load(root).count() == 2L)
 
     LakeIO.appendTxn(df(5L -> Double.box(0.0)), root)
+    assert(spark.read.format("graft-lake").load(root).count() == 3L)
+  }
+
+  test("an unconstrained append never reads its stage; a constrained one does") {
+    val root = fresh("stage_jobs", 1L -> Double.box(5.0))
+    val sc = spark.sparkContext
+    val batch = df(2L -> Double.box(1.0), 3L -> Double.box(2.0))
+    // the jobs of the stage write alone, written the way appendTxn writes it
+    val probe = root + "_probe"
+    val (_, writeJobs) = JobCount(sc)(
+      LakeIO.clusterByPart(LakeIO.hourPartitioned(batch), "ts_hour")
+        .write.mode("overwrite").partitionBy("ts_hour")
+        .option("compression", "zstd").parquet(probe))
+    rm(new java.io.File(probe))
+    val (_, appendJobs) = JobCount(sc)(LakeIO.appendTxn(batch, root))
+    assert(appendJobs == writeJobs)
+    assert(spark.read.format("graft-lake").load(root).count() == 3L)
+
+    LakeIO.addConstraint(spark, root, "value_nonneg", "value >= 0")
+    val v0 = ManifestFileIndex.headVersion(root).get
+    val (e, rejectJobs) = JobCount(sc)(intercept[RuntimeException] {
+      LakeIO.appendTxn(df(4L -> Double.box(-1.0), 5L -> Double.box(3.0)), root)
+    })
+    assert(e.getMessage.contains("value_nonneg"))
+    assert(rejectJobs > writeJobs, "the constraint check reads the stage")
+    assert(ManifestFileIndex.headVersion(root).get == v0)
     assert(spark.read.format("graft-lake").load(root).count() == 3L)
   }
 
