@@ -25,16 +25,22 @@ import graft.syntax._
   * engines and would poison rank comparison; the saturation/ranking
   * behavior under test is unchanged (idf stays monotone in df).
   *
-  * 100 TB shape: tf/dl are one fact shuffle each (map-side combined);
-  * df is dictionary-sized and BROADCAST; the corpus totals are 1-row
-  * broadcast crossJoins (the lazy form — no eager count() job at plan
-  * time). RANKING never funnels a corpus-sized set through one task:
-  * every top-k is the bounded-heap [[graft.functions.TopKByScore]]
-  * aggregate (partial per-partition top-k before the shuffle, one
-  * k×partitions-row final merge, rank = posexplode position) — a
-  * posting list for a frequent term IS corpus-sized, so a global
-  * `row_number` window over the scored candidates would be the
-  * scale-killer even though the candidate set is "bounded".
+  * 100 TB shape: corpus-scan scoring is map-only. Each document is
+  * tokenized once, in a projection, and its dl and per-query-term tf
+  * are array sizes; n_docs, total_len and each query term's df come
+  * from ONE global aggregate, combined map-side so its shuffle carries
+  * one row per partition, and broadcast back as a 1-row crossJoin (the
+  * lazy form — no eager count() job at plan time). No row is ever keyed
+  * by term or by doc, so a head term of a Zipf vocabulary has no task to
+  * pile onto: every task scores its own split of the documents, however
+  * skewed the vocabulary. RANKING never funnels a corpus-sized set
+  * through one task: every top-k is the bounded-heap
+  * [[graft.functions.TopKByScore]] aggregate (partial per-partition
+  * top-k before the shuffle, one k×partitions-row final merge, rank =
+  * posexplode position) — a posting list for a frequent term IS
+  * corpus-sized, so a global `row_number` window over the scored
+  * candidates would be the scale-killer even though the candidate set
+  * is "bounded".
   */
 object RetrievalOps {
 
@@ -51,18 +57,14 @@ object RetrievalOps {
   private val sqlDot =
     "list_sum(list_transform(list_zip(%s, %s), z -> z[1] * z[2]))"
 
-  /** Shared BM25 CTE prefix for the oracle SQL (terms → tf/dl/df/totals →
-    * per-doc decimal score `sd`). Ends with the `sc` relation.
-    */
-  /** The BM25 scoring CTE over an arbitrary corpus relation (`rel` must
-    * be a table name or an aliased derived table), ending at `sc`.
-    */
-  /** The BM25 scoring CTE chain ending at `sc(doc_id, sd)`. `nCte` names
+  /** The oracle SQL's BM25 scoring CTE chain (terms → tf/dl/df/totals →
+    * per-doc decimal score) over a corpus relation `rel` (a table name or
+    * an aliased derived table), ending at `sc(doc_id, sd)`. `nCte` names
     * the corpus-count CTE (default `n`; hybrid_rrf_ann renames it `nb`
     * because its oracle chains this onto the kmeans CTE, which already
     * defines `n`).
     */
-  private def bm25CteOver(rel: String, nCte: String = "n"): String =
+  private[operators] def bm25CteOver(rel: String, nCte: String = "n"): String =
     s"""WITH t0 AS (SELECT doc_id, unnest(string_split(lower(text), ' ')) AS term
        |            FROM $rel),
        |t AS (SELECT doc_id, term FROM t0 WHERE length(term) > 0),
@@ -86,14 +88,15 @@ object RetrievalOps {
 
   /** Per-term BM25 contribution at 6 dp as DECIMAL(18,6), written as ONE
     * shared expression tree so the corpus-scan path ([[bm25Scored]]) and
-    * the inverted-index path ([[bm25FromPostings]]) are bit-identical —
-    * requires columns `tf`, `df`, `dl`, `n_docs`, `total_len` in scope.
+    * the inverted-index path ([[serveTopK]]) are bit-identical —
+    * `tf`/`df` default to the columns of those names; `dl`, `n_docs` and
+    * `total_len` must be in scope.
     */
-  private def contribCol: Column = {
-    val idf = (($"n_docs" - $"df").cast("double") * 2.0 + 1.0) /
-      ($"df".cast("double") * 2.0 + 1.0)
-    val tfn = $"tf".cast("double") * K1p1 /
-      ($"tf".cast("double") + (lit(K1nb) + lit(K1b) * (($"dl" * $"n_docs") / $"total_len")))
+  private def contribCol(tf: Column = $"tf", df: Column = $"df"): Column = {
+    val idf = (($"n_docs" - df).cast("double") * 2.0 + 1.0) /
+      (df.cast("double") * 2.0 + 1.0)
+    val tfn = tf.cast("double") * K1p1 /
+      (tf.cast("double") + (lit(K1nb) + lit(K1b) * (($"dl" * $"n_docs") / $"total_len")))
     round(idf * tfn, 6).cast(DecimalType(18, 6))
   }
 
@@ -105,37 +108,45 @@ object RetrievalOps {
 
   /** [[bm25Scored]] over an arbitrary (doc_id, text) corpus — the public
     * seam the scale harness drives at 1M docs.
+    *
+    * Fused, map-only: ONE projection per document tokenizes once and
+    * derives dl = |tokens| and, for each distinct query term, tf_i =
+    * |tokens| - |tokens without q_i| as array sizes (array_remove, not a
+    * lambda `filter`, so the stage stays whole-stage code-generated), and
+    * ONE global aggregate over those rows yields the 1-row totals
+    * (n_docs, total_len, df_i = #docs with tf_i > 0), broadcast back. No
+    * explode, no window, no doc- or term-keyed shuffle. Null text
+    * tokenizes to the empty array (dl 0, counted in n_docs, nothing added
+    * to total_len — the oracle's `unnest` of a null list), whatever
+    * `size(null)` returns under the session's ANSI mode. Each term's
+    * contribution is [[contribCol]] verbatim and their DECIMAL(18,6) sum
+    * is cast to the DECIMAL(28,6) that `sum` gives the oracle, so values
+    * are bit-identical.
     */
   def bm25ScoredOn(corpus: DataFrame,
       query: Seq[String] = QueryTerms): DataFrame = {
-    // ONE (doc, term, cnt) aggregate feeds tf, dl AND df (r15): the old
-    // four independent derivations of `terms` made Catalyst inline FOUR
-    // full corpus tokenize+explode kernels (tf/dl/df/tl). Now dl is a
-    // keyed window over the aggregate (Σ cnt per doc), df a keyed window
-    // over the query-term rows (one row per (doc, term) ⇒ rows-per-term
-    // IS document frequency — the tfidf/lm_score move), and only the
-    // 1-row corpus totals re-reference the aggregate (2 explodes total).
-    // The isin filter sits ABOVE the dl window (a term predicate cannot
-    // push through a doc_id-partitioned window), so dl still counts
-    // every token of the doc. Values are bit-identical; the oracle CTE
-    // is unchanged.
-    import org.apache.spark.sql.expressions.Window
-    val terms = corpus
-      .select($"doc_id", explode(split(lower($"text"), " ")).as("term"))
-      .where(length($"term") > 0)
-    val base = terms.groupBy($"doc_id", $"term").agg(count(lit(1)).as("tf"))
-    val tfq = base
-      .withColumn("dl", sum($"tf").over(Window.partitionBy($"doc_id")))
-      .where($"term".isin(query: _*))
-      .withColumn("df", count(lit(1)).over(Window.partitionBy($"term")))
-    val n  = corpus.agg(count(lit(1)).as("n_docs"))
-    val tl = base.agg(sum($"tf").as("total_len"))
-
-    tfq
-      .crossJoin(broadcast(n))
-      .crossJoin(broadcast(tl))
-      .select($"doc_id", contribCol.as("contrib"))
-      .groupBy($"doc_id").agg(sum($"contrib").as("sd"))
+    val terms = query.distinct
+    require(terms.nonEmpty, "BM25 needs at least one query term")
+    val tf = terms.indices.map(i => s"tf_$i")
+    val df = terms.indices.map(i => s"df_$i")
+    val tok = array_remove(split(lower(coalesce($"text", lit(""))), " "), "")
+    val perDoc = corpus.select($"doc_id", tok.as("tok"))
+      .select($"doc_id" +: size($"tok").cast("long").as("dl") +: terms.zip(tf).map {
+        case (q, t) => (size($"tok") - size(array_remove($"tok", q))).cast("long").as(t) }: _*)
+    val totals = perDoc.agg(count(lit(1)).as("n_docs"),
+      sum($"dl").as("total_len") +: tf.zip(df).map { case (t, d) => count_if(col(t) > 0).as(d) }: _*)
+    val zero = lit(BigDecimal(0)).cast(DecimalType(18, 6))
+    val sd = tf.zip(df)
+      .map { case (t, d) => when(col(t) > 0, contribCol(col(t), col(d))).otherwise(zero) }
+      .reduce(_ + _)
+    // sd is null for a document with no query term. That filter reads the
+    // broadcast totals, so it stays above the join: a filter on the tf
+    // columns alone is pushed into the scan, where it tokenizes every
+    // document again once per query term.
+    perDoc.crossJoin(broadcast(totals))
+      .select($"doc_id",
+        when(tf.map(col(_) > 0).reduce(_ || _), sd).cast(DecimalType(28, 6)).as("sd"))
+      .where($"sd".isNotNull)
   }
 
   /** RRF contribution of one rank column: 1/(60+rank) at 6 dp, 0 if the
@@ -333,7 +344,7 @@ object RetrievalOps {
     val dfT = pruned.groupBy($"term").agg(count(lit(1)).as("df"))
     val scored = pruned.join(broadcast(dfT), "term")
       .crossJoin(broadcast(st))
-      .select($"doc_id", contribCol.as("contrib"))
+      .select($"doc_id", contribCol().as("contrib"))
       .groupBy($"doc_id").agg(sum($"contrib").as("sd"))
     topKRanked(
       scored.select(($"sd" * 1000000).cast("long").as("score"), $"doc_id".as("id")),
@@ -515,7 +526,7 @@ object RetrievalOps {
     val scored = pruned.join(q, "term")
       .join(broadcast(dfT), "term")
       .crossJoin(broadcast(st))
-      .select($"query_id", $"doc_id", contribCol.as("contrib"))
+      .select($"query_id", $"doc_id", contribCol().as("contrib"))
       .groupBy($"query_id", $"doc_id").agg(sum($"contrib").as("sd"))
     val topk = udaf(graft.functions.TopKByScore.agg(k))
     scored

@@ -35,6 +35,46 @@ class PlanShapeSpec extends AnyFunSuite {
     }
   }
 
+  test("BM25 scoring is map-only: no corpus explode, window or term/doc shuffle") {
+    // bm25ScoredOn tokenizes each document once in a projection and
+    // takes df from one global aggregate broadcast back. A Generate over
+    // the corpus, a Window, or a shuffle keyed on term means postings
+    // went back through a term funnel, where a head term of a Zipf
+    // vocabulary lands on one task. The one Generate allowed is the
+    // posexplode of a ≤k-element TopKByScore heap: it reads the single
+    // row of a global aggregate.
+    import org.apache.spark.sql.catalyst.expressions.PosExplode
+    import org.apache.spark.sql.catalyst.plans.logical._
+    def overOneRow(p: LogicalPlan): Boolean = p match {
+      case Filter(_, c) => overOneRow(c)
+      case Project(_, c) => overOneRow(c)
+      case a: Aggregate => a.groupingExpressions.isEmpty
+      case _ => false
+    }
+    Seq("bm25_topk", "hybrid_rrf").foreach { k =>
+      val plan = SparkEntry.queries(k)(spark, sf).queryExecution.optimizedPlan
+      val gens = plan.collect { case g: Generate => g }.filterNot(g =>
+        g.generator.isInstanceOf[PosExplode] && overOneRow(g.child))
+      assert(gens.isEmpty, s"$k explodes outside the top-k heap: ${gens.mkString("; ")}")
+      val windows = plan.collect { case w: Window => w }
+      assert(windows.isEmpty, s"$k plans a Window: ${windows.mkString("; ")}")
+    }
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val df = SparkEntry.queries("bm25_topk")(spark, sf)
+    df.collect()
+    val keyed = new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) {
+      case e: ShuffleExchangeExec if (e.outputPartitioning match {
+        case h: HashPartitioning =>
+          h.references.exists(a => a.name == "term" || a.name == "doc_id")
+        case _ => false
+      }) => e
+    }
+    assert(keyed.isEmpty,
+      "bm25_topk shuffles on term or doc_id:\n" + keyed.mkString("\n").take(800))
+  }
+
   test("similarity_hamming candidate scan is a pinned BroadcastNestedLoopJoin") {
     // The =!= candidate join is the DELIBERATE exception to the
     // bucket-join invariant: the binary tier is a brute signature scan
