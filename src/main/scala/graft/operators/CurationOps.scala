@@ -479,7 +479,7 @@ object CurationOps {
     // exactly (corpus size, label counts from the deterministic rule)
     // and the training claim as an error-bound boolean — the trained
     // model must classify its corpus at >= 0.95 accuracy (the
-    // HLL/t-digest oracle pattern: the bound proves the algorithm, not
+    // HLL/KLL oracle pattern: the bound proves the algorithm, not
     // bit-equality of an opaque float).
     Op("quality_classifier_lr",
       (s, d) => {

@@ -737,17 +737,19 @@ object EventOps {
 
     // ── O4 at scale: same keep-last-100 semantics through a bounded-heap
     //    typed Aggregator — partial aggregation caps each key at 100 rows
-    //    per partition BEFORE the shuffle (see functions/TopKByTime).
-    //    Same oracle as keep_last_100.
+    //    per partition BEFORE the shuffle (see functions/BoundedTopK).
+    //    The heap ranks (key desc, id asc), so the id is -event_id:
+    //    (ts desc, event_id desc), the window's order. Same oracle as
+    //    keep_last_100.
     Op("keep_last_100_agg",
       (s, d) => {
-        val topk = udaf(graft.functions.TopKByTime.agg)
+        val topk = udaf(graft.functions.BoundedTopK.agg(100))
         ev(s, d)
           .groupBy($"event_type")
-          .agg(topk(unix_micros($"ts"), $"event_id", $"value").as("top"))
+          .agg(topk(unix_micros($"ts"), -$"event_id", $"value").as("top"))
           .select($"event_type", posexplode($"top").as(Seq("pos", "r")))
-          .select($"event_type", $"r.event_id".as("event_id"),
-            $"r.value".as("value"), ($"pos" + 1).cast("long").as("rn"))
+          .select($"event_type", (-$"r.id").as("event_id"),
+            $"r.payload".as("value"), ($"pos" + 1).cast("long").as("rn"))
           .orderBy($"event_type", $"rn")
       },
       """SELECT event_type, event_id, value, rn

@@ -35,7 +35,7 @@ import graft.syntax._
   * pile onto: every task scores its own split of the documents, however
   * skewed the vocabulary. RANKING never funnels a corpus-sized set
   * through one task: every top-k is the bounded-heap
-  * [[graft.functions.TopKByScore]] aggregate (partial per-partition
+  * [[graft.functions.BoundedTopK]] aggregate (partial per-partition
   * top-k before the shuffle, one k×partitions-row final merge, rank =
   * posexplode position) — a posting list for a frequent term IS
   * corpus-sized, so a global `row_number` window over the scored
@@ -158,17 +158,17 @@ object RetrievalOps {
 
   /** Exact top-k of (score, id) via the bounded-heap aggregate, emitted
     * as (id, rank). `score` must already be the SCALED-LONG image of the
-    * decimal ordering key (see [[graft.functions.TopKByScore]]); rank is
+    * decimal ordering key (see [[graft.functions.BoundedTopK]]); rank is
     * the posexplode position — identical to the global
     * `row_number() OVER (ORDER BY score DESC, id)` restricted to the
     * true top-k, with no corpus-sized sort task anywhere in the plan.
     */
   private[operators] def topKRanked(scored: DataFrame, k: Int,
       idOut: String, rankOut: String): DataFrame = {
-    val topk = udaf(graft.functions.TopKByScore.agg(k))
-    scored.agg(topk($"score", $"id").as("top"))
+    val topk = udaf(graft.functions.BoundedTopK.agg(k))
+    scored.agg(topk($"score", $"id", lit(0.0)).as("top"))
       .select(posexplode($"top").as(Seq("pos", "r")))
-      .select($"r.id".as(idOut), $"r.score".as("score"),
+      .select($"r.id".as(idOut), $"r.key".as("score"),
         ($"pos" + 1).cast("long").as(rankOut))
   }
 
@@ -499,7 +499,7 @@ object RetrievalOps {
     * of all queries' term buckets, the (query_id, term) table is a
     * broadcast literal, per-(query, doc) scores shuffle once, and each
     * query's ranking is its OWN bounded heap (groupBy query_id + the
-    * TopKByScore partial aggregate — ≤ k rows per query per partition
+    * BoundedTopK partial aggregate — ≤ k rows per query per partition
     * reach the shuffle). At 100 TB this is how a decontamination pass
     * runs thousands of eval queries: cost is O(Σ matched postings),
     * never O(queries × corpus), and no ranking window appears anywhere.
@@ -528,14 +528,14 @@ object RetrievalOps {
       .crossJoin(broadcast(st))
       .select($"query_id", $"doc_id", contribCol().as("contrib"))
       .groupBy($"query_id", $"doc_id").agg(sum($"contrib").as("sd"))
-    val topk = udaf(graft.functions.TopKByScore.agg(k))
+    val topk = udaf(graft.functions.BoundedTopK.agg(k))
     scored
       .select($"query_id", ($"sd" * 1000000).cast("long").as("score"),
         $"doc_id".as("id"))
-      .groupBy($"query_id").agg(topk($"score", $"id").as("top"))
+      .groupBy($"query_id").agg(topk($"score", $"id", lit(0.0)).as("top"))
       .select($"query_id", posexplode($"top").as(Seq("pos", "r")))
       .select($"query_id", $"r.id".as("doc_id"),
-        ($"r.score".cast("double") / 1e6).as("score"),
+        ($"r.key".cast("double") / 1e6).as("score"),
         ($"pos" + 1).cast("long").as("rk"))
       .orderBy($"query_id", $"rk")
   }
@@ -557,7 +557,7 @@ object RetrievalOps {
     // totals (exact, carried as scaled longs through the bounded-heap
     // top-k — DECIMAL(18,6) × 1e6 is the unscaled long), tie-broken by
     // doc_id. No ranking window: posting lists of frequent terms are
-    // corpus-sized, so rank comes from TopKByScore's partial-aggregated
+    // corpus-sized, so rank comes from BoundedTopK's partial-aggregated
     // heap (≤ 10 rows per partition reach the shuffle).
     Op("bm25_topk",
       (s, d) => {
@@ -690,7 +690,7 @@ object RetrievalOps {
     // side's global ranks, and a FULL OUTER join fuses
     // 1/(60+r) + 1/(60+r) with an absent side contributing 0. Top 10 by
     // fused decimal score. 100 TB: BOTH side rankings and the final
-    // fused rank run through the bounded-heap TopKByScore aggregate —
+    // fused rank run through the bounded-heap BoundedTopK aggregate —
     // cosine scoring stays map-only (broadcast query vector), the text
     // side is posting-list work, and no plan node ever sorts more than
     // k×partitions rows in one task. The fused set (≤ 200 rows) is

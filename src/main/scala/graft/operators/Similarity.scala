@@ -1527,7 +1527,7 @@ object Similarity {
     // whether the approximate searches FIND the right neighbors. This op
     // measures recall@10 of ivf_trained / pq / ivfpq against the exact
     // brute-force top-10 and emits error-bound BOOLEANS (the HLL/
-    // t-digest recipe): per-query floors with wide margin under the
+    // KLL recipe): per-query floors with wide margin under the
     // measured minima (ivf .7 / pq .4 / ivfpq .6 at sf0.01) plus
     // tighter mean-recall floors (measured means .92/.64/.86), so a
     // future regression of the index quality — not just its determinism
@@ -1772,7 +1772,7 @@ object Similarity {
     // bandwidth; the standard first-pass filter before int8/float
     // re-rank.
     // Ranking: NO per-q_id window — 5 query keys would funnel the n×5
-    // scored pairs into 5 sort tasks. The bounded-heap TopKByScore
+    // scored pairs into 5 sort tasks. The bounded-heap BoundedTopK
     // aggregate (score = -hamming so "best" = smallest distance) caps
     // each partition's contribution at 10 rows per q_id before the
     // shuffle; rank = posexplode position of the heap-merged result.
@@ -1782,7 +1782,7 @@ object Similarity {
     // scan, pinned by PlanShapeSpec).
     Op("similarity_hamming",
       (s, d) => {
-        val topk = udaf(graft.functions.TopKByScore.agg(10))
+        val topk = udaf(graft.functions.BoundedTopK.agg(10))
         val sig = emb(s, d)
           .select($"vec_id", expr(
             "aggregate(sequence(0, size(embedding) - 1), CAST(0 AS BIGINT), " +
@@ -1796,9 +1796,9 @@ object Similarity {
             (-bit_count($"qs".bitwiseXOR($"sig"))).cast("long").as("score"),
             $"vec_id")
           .groupBy($"q_id")
-          .agg(topk($"score", $"vec_id").as("top"))
+          .agg(topk($"score", $"vec_id", lit(0.0)).as("top"))
           .select($"q_id", posexplode($"top").as(Seq("pos", "r")))
-          .select($"q_id", $"r.id".as("vec_id"), (-$"r.score").as("hamming"),
+          .select($"q_id", $"r.id".as("vec_id"), (-$"r.key").as("hamming"),
             ($"pos" + 1).cast("long").as("rn"))
           .orderBy($"q_id", $"rn")
       },

@@ -101,6 +101,42 @@ object TemporalJoins {
       .orderBy($"event_id")
   }
 
+  /** Items `approx_top_k` tracks (and returns) for approx_top_users. */
+  private val TopUsersK = 4096
+
+  /** Top-10 users by event count, (cnt desc, user) on the string form. */
+  private[graft] def topUsers(events: DataFrame): DataFrame =
+    events
+      .agg(expr(s"approx_top_k(user_id, $TopUsersK, $TopUsersK)").as("tk"))
+      .select(explode($"tk").as("e"))
+      .select($"e.item".cast("string").as("user"), $"e.count".as("cnt"))
+      .orderBy($"cnt".desc, $"user".asc_nulls_last)
+      .limit(10)
+
+  /** Per event_type: n, and whether each KLL p50/p95/p99 estimate has
+    * rank error ≤ 0.05 against the group's own values.
+    */
+  private[graft] def quantileRankCheck(events: DataFrame): DataFrame = {
+    val est = events
+      .groupBy($"event_type")
+      .agg(kll_sketch_agg_double($"value").as("sk"))
+      .select($"event_type",
+        kll_sketch_get_quantile_double($"sk", lit(0.5)).as("q50"),
+        kll_sketch_get_quantile_double($"sk", lit(0.95)).as("q95"),
+        kll_sketch_get_quantile_double($"sk", lit(0.99)).as("q99"))
+    events.join(broadcast(est), Seq("event_type"))
+      .groupBy($"event_type")
+      .agg(count(lit(1)).as("n"),
+        avg(when($"value" <= $"q50", 1.0).otherwise(0.0)).as("r50"),
+        avg(when($"value" <= $"q95", 1.0).otherwise(0.0)).as("r95"),
+        avg(when($"value" <= $"q99", 1.0).otherwise(0.0)).as("r99"))
+      .select($"event_type", $"n",
+        (abs($"r50" - 0.5) <= 0.05).as("p50_rank_ok"),
+        (abs($"r95" - 0.95) <= 0.05).as("p95_rank_ok"),
+        (abs($"r99" - 0.99) <= 0.05).as("p99_rank_ok"))
+      .orderBy($"event_type")
+  }
+
   def ops: Seq[Op] = Seq(
 
     Op("asof_join",
@@ -219,51 +255,34 @@ object TemporalJoins {
         |FROM ex JOIN est USING (event_type)
         |ORDER BY event_type""".stripMargin)),
 
-    // Mergeable t-digest quantiles (functions/TDigest.scala): per-type
-    // p50/p95/p99 of value through the k1-scale merging digest. The
-    // digest's VALUE output isn't cross-engine comparable, but its RANK
-    // ERROR is the quantity t-digest actually bounds — so the op ranks
+    // Mergeable quantile sketch: per-type p50/p95/p99 of value through
+    // Spark's built-in KLL sketch (`kll_sketch_agg_double`, default k;
+    // one sketch per group, three quantiles read off it). An estimate's
+    // VALUE isn't cross-engine comparable — and KLL compaction is
+    // randomized, so it is not even stable run to run — but its RANK
+    // ERROR is the quantity KLL bounds (~1.7% at k=200). So the op ranks
     // each estimate against the group's own data (fraction of values ≤
     // estimate) and emits booleans |rank − q| ≤ 0.05, which the oracle
     // matches with TRUE. A hash match proves the rank-error bound held
-    // on every group (the same bound TDigestSpec proves adversarially).
+    // on every group (the same bound SketchOpsSpec checks on adversarial
+    // inputs over repeated runs).
     Op("quantile_tdigest",
-      (s, d) => {
-        import graft.functions.TDigest.tdigestQuantile
-        val est = Tables.events(s, d)
-          .groupBy($"event_type")
-          .agg(tdigestQuantile($"value", 0.5).as("q50"),
-            tdigestQuantile($"value", 0.95).as("q95"),
-            tdigestQuantile($"value", 0.99).as("q99"))
-        Tables.events(s, d).join(broadcast(est), Seq("event_type"))
-          .groupBy($"event_type")
-          .agg(count(lit(1)).as("n"),
-            avg(when($"value" <= $"q50", 1.0).otherwise(0.0)).as("r50"),
-            avg(when($"value" <= $"q95", 1.0).otherwise(0.0)).as("r95"),
-            avg(when($"value" <= $"q99", 1.0).otherwise(0.0)).as("r99"))
-          .select($"event_type", $"n",
-            (abs($"r50" - 0.5) <= 0.05).as("p50_rank_ok"),
-            (abs($"r95" - 0.95) <= 0.05).as("p95_rank_ok"),
-            (abs($"r99" - 0.99) <= 0.05).as("p99_rank_ok"))
-          .orderBy($"event_type")
-      },
+      (s, d) => quantileRankCheck(Tables.events(s, d)),
       Some("""SELECT event_type, CAST(count(*) AS BIGINT) AS n,
         |       TRUE AS p50_rank_ok, TRUE AS p95_rank_ok, TRUE AS p99_rank_ok
         |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin)),
 
-    // SpaceSaving heavy hitters (functions/TopKSketch.scala): top-10
-    // users by event count through the mergeable sketch. With distinct
-    // users ≤ k=4096 at every test SF the sketch runs in its exact
-    // regime (no eviction anywhere), so the result is oracle-exact;
-    // TopKSketchSpec exercises the eviction/merge bounds with tiny k.
+    // Heavy hitters: top-10 users by event count through Spark's
+    // built-in mergeable `approx_top_k` (DataSketches frequent items).
+    // It tracks TopUsersK items, more than the distinct users of every
+    // test SF (150 at sf0.01, 1,500 at sf0.1), so no counter is ever
+    // purged and every count is exact: the result is oracle-exact. A
+    // null user_id counts as one item, as it is one group of the
+    // oracle's GROUP BY. The outer sort re-applies the oracle's
+    // (cnt desc, user) tie-break on the user's string form, nulls last
+    // as in DuckDB.
     Op("approx_top_users",
-      (s, d) => Tables.events(s, d)
-        .agg(graft.functions.TopKSketch.approxTopK(
-          $"user_id".cast("string")).as("tk"))
-        .select(explode($"tk").as("e"))
-        .select($"e.item".as("user"), $"e.est".as("cnt"))
-        .orderBy($"cnt".desc, $"user")
-        .limit(10),
+      (s, d) => topUsers(Tables.events(s, d)),
       """SELECT CAST(user_id AS VARCHAR) AS user,
         |       CAST(count(*) AS BIGINT) AS cnt
         |FROM events GROUP BY 1 ORDER BY cnt DESC, user LIMIT 10""".stripMargin)

@@ -86,10 +86,20 @@ final class ServingServer(
     }.toVector
   }
 
+  /** The TTL runs from the start of a load, so the store sees one query
+    * per `refreshMs`; a load that outlasted `refreshMs` runs it from its
+    * end instead — stamped at its start, that snapshot would already be
+    * stale and every following request would reload.
+    */
   private def snapshot(): Vector[Point] = {
     val now = System.currentTimeMillis()
     if (now - cache._1 >= refreshMs) refreshLock.synchronized {
-      if (now - cache._1 >= refreshMs) cache = (System.currentTimeMillis(), load())
+      if (now - cache._1 >= refreshMs) {
+        val start = System.currentTimeMillis()
+        val points = load()
+        val end = System.currentTimeMillis()
+        cache = (if (end - start >= refreshMs) end else start, points)
+      }
     }
     cache._2
   }

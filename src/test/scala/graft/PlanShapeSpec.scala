@@ -19,7 +19,7 @@ class PlanShapeSpec extends AnyFunSuite {
 
   test("retrieval/ranking tier has no global-rank window funnel") {
     // bm25_topk / hybrid_rrf / similarity_hamming rank via the
-    // bounded-heap TopKByScore aggregate (partial top-k per partition
+    // bounded-heap BoundedTopK aggregate (partial top-k per partition
     // before the shuffle). A Window node anywhere in these plans means
     // someone reintroduced the corpus-sized single-task sort the r6
     // verdict flagged — the scored input (posting lists, the full
@@ -31,7 +31,7 @@ class PlanShapeSpec extends AnyFunSuite {
         case w: org.apache.spark.sql.catalyst.plans.logical.Window => w
       }
       assert(windows.isEmpty,
-        s"$k must rank through TopKByScore, not a Window: ${windows.mkString("; ")}")
+        s"$k must rank through BoundedTopK, not a Window: ${windows.mkString("; ")}")
     }
   }
 
@@ -41,7 +41,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // the corpus, a Window, or a shuffle keyed on term means postings
     // went back through a term funnel, where a head term of a Zipf
     // vocabulary lands on one task. The one Generate allowed is the
-    // posexplode of a ≤k-element TopKByScore heap: it reads the single
+    // posexplode of a ≤k-element BoundedTopK heap: it reads the single
     // row of a global aggregate.
     import org.apache.spark.sql.catalyst.expressions.PosExplode
     import org.apache.spark.sql.catalyst.plans.logical._

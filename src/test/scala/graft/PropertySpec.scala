@@ -3,7 +3,7 @@ package graft
 import org.scalacheck.{Gen, Properties}
 import org.scalacheck.Prop.forAll
 
-import graft.functions.TopKByTime
+import graft.functions.BoundedTopK
 import graft.operators.Dedup.MinHashKernel
 
 /** Pure-JVM property tests of the engine's kernel functions (scalacheck;
@@ -40,36 +40,47 @@ object PropertySpec extends Properties("graft.kernels") {
         b.map(_._1).toSeq == (0 until MinHashKernel.NumBands)
     }
 
-  private val inGen = for {
-    ts <- Gen.chooseNum(0L, 1000L)
-    id <- Gen.chooseNum(0L, 100000L)
-    v <- Gen.chooseNum(-1000, 1000).map(_ / 10.0)
-  } yield TopKByTime.In(ts, id, v)
+  // ── bounded top-k heap: rows with DUPLICATE keys (0..20) and unique
+  //    ids, fed in both of its callers' directions — rankings pass
+  //    (score, id), keep-last passes (ts, -event_id) and reads the id
+  //    back negated — with the payload riding along
+  private val topK = 10
+  private val topKAgg = BoundedTopK.agg(topK)
+
+  private val rowsGen: Gen[List[(Long, Long)]] = for {
+    keys <- Gen.listOf(Gen.chooseNum(0L, 20L))
+    ids <- Gen.listOfN(keys.size, Gen.chooseNum(0L, 100000L))
+  } yield keys.zip(ids).distinctBy(_._2)
+
+  /** (key, id) rows in the heap's input form, per direction. */
+  private def byScore(rows: Seq[(Long, Long)]) =
+    rows.map { case (k, i) => BoundedTopK.In(k, i, i * 0.5) }
+  private def byTime(rows: Seq[(Long, Long)]) =
+    rows.map { case (t, e) => BoundedTopK.In(t, -e, e * 0.5) }
+
+  private def reduced(ins: Seq[BoundedTopK.In]) =
+    ins.foldLeft(topKAgg.zero)(topKAgg.reduce)
 
   property("topK reduce: bounded at K, finish desc, equals sort-take") =
-    forAll(Gen.listOf(inGen)) { ins =>
-      val buf = ins.foldLeft(TopKByTime.agg.zero)(TopKByTime.agg.reduce)
-      val out = TopKByTime.agg.finish(buf)
-      val expected = ins.distinct.sortBy(r => (r.ts, r.event_id))
-        .takeRight(TopKByTime.K).reverse
-      // duplicates (same ts,id) may both survive; compare on keys
-      out.length <= TopKByTime.K &&
-        out.map(r => (r.ts, r.event_id)) ==
-          out.map(r => (r.ts, r.event_id)).sorted(Ordering[(Long, Long)].reverse) &&
-        (ins.distinct.size != ins.size ||
-          out.map(r => (r.ts, r.event_id)) == expected.map(r => (r.ts, r.event_id)))
+    forAll(rowsGen) { rows =>
+      val score = topKAgg.finish(reduced(byScore(rows)))
+        .map(r => (r.key, r.id, r.payload))
+      val time = topKAgg.finish(reduced(byTime(rows)))
+        .map(r => (r.key, -r.id, r.payload))
+      score.length <= topK && time.length <= topK &&
+        score == rows.sortBy { case (k, i) => (-k, i) }.take(topK)
+          .map { case (k, i) => (k, i, i * 0.5) } &&
+        time == rows.sortBy { case (t, e) => (-t, -e) }.take(topK)
+          .map { case (t, e) => (t, e, e * 0.5) }
     }
 
   property("topK merge: associative-equivalent to reducing the concatenation") =
-    forAll(Gen.listOf(inGen), Gen.listOf(inGen)) { (a, b) =>
-      val all = (a ++ b).distinct
-      val left = all.foldLeft(TopKByTime.agg.zero)(TopKByTime.agg.reduce)
-      val split = TopKByTime.agg.merge(
-        a.distinct.foldLeft(TopKByTime.agg.zero)(TopKByTime.agg.reduce),
-        b.distinct.filterNot(a.distinct.contains(_))
-          .foldLeft(TopKByTime.agg.zero)(TopKByTime.agg.reduce))
-      TopKByTime.agg.finish(left).map(r => (r.ts, r.event_id)).toSet ==
-        TopKByTime.agg.finish(split).map(r => (r.ts, r.event_id)).toSet
+    forAll(rowsGen, Gen.chooseNum(0, 100)) { (rows, cut) =>
+      val (a, b) = rows.splitAt(cut)
+      Seq(byScore _, byTime _).forall { dir =>
+        topKAgg.finish(topKAgg.merge(reduced(dir(a)), reduced(dir(b)))) ==
+          topKAgg.finish(reduced(dir(rows)))
+      }
     }
 
   property("fnv1a: deterministic and spreads") =
@@ -112,7 +123,7 @@ object PropertySpec extends Properties("graft.kernels") {
 
   // ── SpaceSaving: est ≥ true ≥ est − err for every retained item, under
   //    arbitrary insert sequences and random two-way merges
-  import graft.functions.SpaceSavingBuffer
+  import graft.streaming.SpaceSavingBuffer
 
   private val itemGen = Gen.oneOf("a", "b", "c", "d", "e", "f", "g", "h")
 
@@ -157,35 +168,5 @@ object PropertySpec extends Properties("graft.kernels") {
       val rev = new KmvBuffer(8); xs.reverse.foreach(rev.add)
       fwd.set == rev.set &&
         (xs.distinct.size >= 8 || fwd.estimate == xs.distinct.size.toLong)
-    }
-
-  // ── t-digest: estimates stay inside the data range, are monotone in q,
-  //    and a merged digest keeps the rank error bounded
-  import graft.functions.TDigestBuffer
-
-  private val valGen = Gen.chooseNum(-1000, 1000).map(_ / 7.0)
-
-  property("t-digest: quantiles bounded by min/max and monotone in q") =
-    forAll(Gen.nonEmptyListOf(valGen)) { xs =>
-      val d = new TDigestBuffer(100.0); xs.foreach(d.add(_))
-      val qs = Seq(0.0, 0.25, 0.5, 0.75, 1.0).map(d.quantile)
-      qs.forall(v => v >= xs.min && v <= xs.max) && qs == qs.sorted
-    }
-
-  property("t-digest: merged digest's median stays rank-accurate") =
-    forAll(Gen.nonEmptyListOf(valGen), Gen.listOf(valGen)) { (a, b) =>
-      val l = new TDigestBuffer(100.0); a.foreach(l.add(_))
-      val r = new TDigestBuffer(100.0); b.foreach(r.add(_))
-      l.mergeIn(r)
-      val all = (a ++ b).sorted
-      val est = l.quantile(0.5)
-      // two-sided rank check (one-sided counts misfire on ties): est is a
-      // valid (0.5 ± ε) quantile iff strictly-below mass ≤ 0.5+ε and
-      // at-or-below mass ≥ 0.5−ε. At δ=100 the k1-scale bound is ~1-2%
-      // of n — 10% + discreteness slack is a loose structural ceiling.
-      val n = all.length.toDouble
-      val eps = 0.1 + 2.0 / n
-      all.count(_ < est) / n <= 0.5 + eps &&
-        all.count(_ <= est) / n >= 0.5 - eps
     }
 }

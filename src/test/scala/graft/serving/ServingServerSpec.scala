@@ -96,6 +96,21 @@ class ServingServerSpec extends AnyFunSuite {
       srv.invalidate()
       assert(get(srv.boundPort, "/api/weather")._2.contains("\"temperature\":2.0"))
     } finally srv.close()
+
+    // a load slower than the TTL: the TTL runs from the end of the load,
+    // so the requests right after it are served from the snapshot
+    val loads = new java.util.concurrent.atomic.AtomicInteger()
+    val slow = new ServingServer(() => {
+      Thread.sleep(1500); loads.incrementAndGet(); src()
+    }, Seq("A"), refreshMs = 1000L)
+    try {
+      assert(get(slow.boundPort, "/api/weather")._1 == 200)
+      val loaded = System.nanoTime()
+      (1 to 3).foreach(_ => assert(get(slow.boundPort, "/api/weather")._1 == 200))
+      val elapsedMs = (System.nanoTime() - loaded) / 1000000L
+      assert(loads.get == 1, s"${loads.get} loads: a request within the TTL reloaded")
+      assert(elapsedMs < 1000L, s"three snapshot requests took $elapsedMs ms")
+    } finally slow.close()
   }
 
   test("full loop: stream → windowed agg → Derby upsert → HTTP serving") {
