@@ -1,6 +1,9 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+
+import graft.sources.LocalFs
+
 /** Correctness dump: each SparkEntry.queries result → parquet, plus
   * oracle_sql.json, for the DuckDB oracle compare
   * (`scripts/check_oracle.py`). A key whose dump throws is reported at
@@ -86,7 +89,8 @@ object Verify {
         name -> pool.submit(new java.util.concurrent.Callable[Unit] {
           def call(): Unit = {
             val s = spark.newSession()
-            ntz(fn(s, sfDir)).coalesce(1).write.mode("overwrite")
+            ntz(fn(s, sfDir)).coalesce(1).write.options(LocalFs.WriteOptions)
+              .mode("overwrite")
               .parquet(s"$outDir/$name")
           }
         })

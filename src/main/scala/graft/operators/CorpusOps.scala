@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.functions._
 
 import graft.Op
-import graft.sources.Tables
+import graft.sources.{LocalFs, Tables}
 import graft.syntax._
 
 /** Corpus-curation operators — the batch patterns a training-data pipeline
@@ -326,7 +326,7 @@ object CorpusOps {
         merges.zipWithIndex
           .map { case ((l, r, c), i) => (i.toLong, l, r, c) }
           .toDF("rank", "l", "r", "cnt")
-          .coalesce(1).write.mode("overwrite").parquet(path)
+          .coalesce(1).write.options(LocalFs.WriteOptions).mode("overwrite").parquet(path)
       }
     }
     s.read.parquet(path).orderBy(col("rank")).collect()

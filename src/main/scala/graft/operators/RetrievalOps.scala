@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Op
-import graft.sources.Tables
+import graft.sources.{LocalFs, Tables}
 import graft.syntax._
 
 /** Retrieval surface a training-data pipeline runs next to curation:
@@ -270,9 +270,10 @@ object RetrievalOps {
       // 1M docs / 20k-term Zipf, SCALE.md r12)
       p.repartition(col("bucket"))
         .sortWithinPartitions(col("bucket"), col("term"))
-        .write.partitionBy("bucket").mode(mode).parquet(dir + "/postings")
+        .write.options(LocalFs.WriteOptions)
+        .partitionBy("bucket").mode(mode).parquet(dir + "/postings")
       batchStatsFrom(batch, p).coalesce(1)
-        .write.mode(mode).parquet(dir + "/stats")
+        .write.options(LocalFs.WriteOptions).mode(mode).parquet(dir + "/stats")
     } finally { p.unpersist(); () }
   }
 

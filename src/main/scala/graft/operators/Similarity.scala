@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Op
-import graft.sources.Tables
+import graft.sources.{LocalFs, Tables}
 import graft.syntax._
 
 /** Similarity search over the `embeddings` table (64-dim float vectors) —
@@ -584,7 +584,8 @@ object Similarity {
       (build: => DataFrame): DataFrame = {
     graft.syntax.pathLocked(path) {
       if (!new java.io.File(path + "/_SUCCESS").exists())
-        build.coalesce(1).write.mode("overwrite").parquet(path)
+        build.coalesce(1).write.options(LocalFs.WriteOptions)
+          .mode("overwrite").parquet(path)
     }
     s.read.parquet(path)
   }
@@ -604,7 +605,8 @@ object Similarity {
     graft.syntax.pathLocked(path) {
       if (!new java.io.File(path + "/_SUCCESS").exists())
         build.repartition(col("cell"))
-          .write.partitionBy("cell").mode("overwrite").parquet(path)
+          .write.options(LocalFs.WriteOptions)
+          .partitionBy("cell").mode("overwrite").parquet(path)
     }
     s.read.parquet(path).withColumn("cell", $"cell".cast("long"))
   }
@@ -735,11 +737,13 @@ object Similarity {
   def writeFrozenIvf(indexDir: String, embDf: DataFrame): Unit = {
     val e = embDf.select($"vec_id", $"embedding")
     val cents = kmeansFit(e, k = dedupK(e.count()), iters = 2)
-    cents.coalesce(1).write.mode("overwrite").parquet(indexDir + "/centroids")
+    cents.coalesce(1).write.options(LocalFs.WriteOptions)
+      .mode("overwrite").parquet(indexDir + "/centroids")
     ivfAssign(e, cents).join(e, Seq("vec_id"))
       .select($"vec_id", $"embedding", $"cell", lit(0L).as("gen"))
       .repartition(col("cell"))
-      .write.partitionBy("cell").mode("overwrite").parquet(indexDir + "/cells")
+      .write.options(LocalFs.WriteOptions)
+      .partitionBy("cell").mode("overwrite").parquet(indexDir + "/cells")
   }
 
   /** Lake + `CREATE ANN INDEX` fixture for `similarity_ivf_sql`: the
@@ -812,10 +816,12 @@ object Similarity {
       val cents = annCentroids(s, d)
       ivfAssign(emb(s, d).where($"vec_id" % 5 =!= 0), cents)
         .repartition(col("cell"))
-        .write.partitionBy("cell").mode("overwrite").parquet(path)
+        .write.options(LocalFs.WriteOptions)
+        .partitionBy("cell").mode("overwrite").parquet(path)
       ivfAssign(emb(s, d).where($"vec_id" % 5 === 0), cents)
         .repartition(col("cell"))
-        .write.partitionBy("cell").mode("append").parquet(path)
+        .write.options(LocalFs.WriteOptions)
+        .partitionBy("cell").mode("append").parquet(path)
       java.nio.file.Files.write(marker.toPath, Array.empty[Byte])
     }
     s.read.parquet(path).withColumn("cell", $"cell".cast("long"))
@@ -841,10 +847,12 @@ object Similarity {
           .join(ivfAssign(batch, cents), Seq("vec_id"))
       batchCodes(emb(s, d).where($"vec_id" % 5 =!= 0))
         .repartition(col("cell"))
-        .write.partitionBy("cell").mode("overwrite").parquet(path)
+        .write.options(LocalFs.WriteOptions)
+        .partitionBy("cell").mode("overwrite").parquet(path)
       batchCodes(emb(s, d).where($"vec_id" % 5 === 0))
         .repartition(col("cell"))
-        .write.partitionBy("cell").mode("append").parquet(path)
+        .write.options(LocalFs.WriteOptions)
+        .partitionBy("cell").mode("append").parquet(path)
       java.nio.file.Files.write(marker.toPath, Array.empty[Byte])
     }
     s.read.parquet(path).withColumn("cell", $"cell".cast("long"))

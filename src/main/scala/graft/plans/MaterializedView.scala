@@ -16,7 +16,7 @@ import org.apache.spark.sql.graft.{GraftLakeScan, GraftLakeTable, ManifestFileIn
 import org.apache.spark.sql.types.{DecimalType, IntegerType}
 
 import graft.Op
-import graft.sources.{LakeIO, Tables}
+import graft.sources.{LakeIO, LocalFs, Tables}
 import graft.syntax._
 
 /** Materialized views with TRANSPARENT rewrite — the warehouse feature the
@@ -132,7 +132,7 @@ object Mv {
       if (!new File(mvPath, "_SUCCESS").exists())
         state.repartition(col("ts_hour"))
           .sortWithinPartitions($"ts_hour")
-          .write.mode("overwrite")
+          .write.options(LocalFs.WriteOptions).mode("overwrite")
           .option("compression", "zstd").parquet(mvPath)
     }
     val mv = HourlyMv(canonical(basePath), mvPath, v,

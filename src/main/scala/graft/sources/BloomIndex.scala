@@ -56,7 +56,7 @@ object BloomIndex {
     scan.groupBy($"_dv_file")
       .agg(BloomSketch.bloomAgg(col(column), expected, fpp).as("bloom"))
       .repartition(1) // sidecar is metadata-scale; one file reads fastest
-      .write.mode("overwrite").parquet(idxDir(path, column))
+      .write.options(LocalFs.WriteOptions).mode("overwrite").parquet(idxDir(path, column))
     entries.size.toLong
   }
 

@@ -50,6 +50,18 @@ object LakeIO {
     df.repartition(df.sparkSession.sparkContext.defaultParallelism,
       col(partCol))
 
+  /** The stage write of every lake commit: `df` clustered by
+    * [[clusterByPart]] (or by `cluster`, an OPTIMIZE's own shaping),
+    * written as ZSTD parquet with one directory per `partCol` value
+    * through [[LocalFs]], so no file of the write forks a `chmod`.
+    */
+  private[graft] def writeStage(df: DataFrame, partCol: String, stage: String,
+      cluster: DataFrame => DataFrame = null): Unit = {
+    val shaped = if (cluster == null) clusterByPart(df, partCol) else cluster(df)
+    shaped.write.options(LocalFs.WriteOptions).mode("overwrite")
+      .partitionBy(partCol).option("compression", "zstd").parquet(stage)
+  }
+
   def writeLake(df: DataFrame, path: String): Unit = {
     val withHour = hourPartitioned(df)
     replaceViaStage(path, "ts_hour", withHour, "writeLake")
@@ -79,11 +91,7 @@ object LakeIO {
       what: String): Unit = {
     val token = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
     val stage = path + s"_stage_w$token"
-    clusterByPart(df, partCol)
-      .write.mode("overwrite")
-      .partitionBy(partCol)
-      .option("compression", "zstd")
-      .parquet(stage)
+    writeStage(df, partCol, stage)
     // a violation aborts BEFORE the swap: existing data stays intact
     validateStage(path, stage, what)
     val root = new java.io.File(path)
@@ -270,9 +278,7 @@ object LakeIO {
         "swap would invalidate its snapshots; use LakeIO.compactSnapshots")
     val df = s.read.parquet(path)
     val tmp = path + "_compacting"
-    clusterByPart(df, "ts_hour")
-      .write.mode("overwrite").partitionBy("ts_hour")
-      .option("compression", "zstd").parquet(tmp)
+    writeStage(df, "ts_hour", tmp)
     val dir = new java.io.File(path)
     val bak = new java.io.File(path + "_old")
     dir.renameTo(bak)
@@ -336,11 +342,7 @@ object LakeIO {
     import org.apache.spark.sql.graft.ManifestFileIndex
     val v = ManifestFileIndex.headVersion(path).getOrElse(0) + 1
     val stage = path + s"_stage_a$v"
-    clusterByPart(withHour, "ts_hour")
-      .write.mode("overwrite")
-      .partitionBy("ts_hour")
-      .option("compression", "zstd")
-      .parquet(stage)
+    writeStage(withHour, "ts_hour", stage)
     val appended = moveStaged(path, "ts_hour", stage, s"a$v-")
     // delta commit: appends rebase over concurrent commits and carry any
     // live deletion vectors forward (commitEntries would drop both)
@@ -372,11 +374,7 @@ object LakeIO {
     // the commit protocol
     val token = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
     val stage = path + s"_stage_t$token"
-    clusterByPart(withHour, "ts_hour")
-      .write.mode("overwrite")
-      .partitionBy("ts_hour")
-      .option("compression", "zstd")
-      .parquet(stage)
+    writeStage(withHour, "ts_hour", stage)
     val appended = moveStaged(path, "ts_hour", stage, s"t$token-")
     ManifestFileIndex.commitDelta(path, "ts_hour", base, appended, Set.empty)
   }
@@ -404,11 +402,7 @@ object LakeIO {
     if (tableSchema(path).isEmpty) writeSchemaFile(path, withHour.schema)
     val base = ManifestFileIndex.claimedVersion(path)
     val stage = path + s"_stage_w$stageId"
-    clusterByPart(withHour, "ts_hour")
-      .write.mode("overwrite")
-      .partitionBy("ts_hour")
-      .option("compression", "zstd")
-      .parquet(stage)
+    writeStage(withHour, "ts_hour", stage)
     val appended = moveStaged(path, "ts_hour", stage, s"w$stageId-")
     ManifestFileIndex.writeStaged(path, stageId, base, "ts_hour", appended)
   }
@@ -516,11 +510,7 @@ object LakeIO {
     val withHour = hourPartitioned(df)
     if (tableSchema(path).isEmpty) writeSchemaFile(path, withHour.schema)
     val stage = path + s"_stage_br_${name}_$k"
-    clusterByPart(withHour, "ts_hour")
-      .write.mode("overwrite")
-      .partitionBy("ts_hour")
-      .option("compression", "zstd")
-      .parquet(stage)
+    writeStage(withHour, "ts_hour", stage)
     val appended = moveStaged(path, "ts_hour", stage, s"br$name-$k-")
     ManifestFileIndex.writeStaged(path, s"b-$name-$k", base, "ts_hour",
       priorAdds ++ appended)
@@ -1084,7 +1074,8 @@ object LakeIO {
         Seq("_dv_file", "_dv_pos"), "left_anti")
     val token = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
     val dvRel = s"_graft_dv/dv-$token"
-    positions.write.mode("errorifexists").parquet(s"$path/$dvRel")
+    positions.write.options(LocalFs.WriteOptions).mode("errorifexists")
+      .parquet(s"$path/$dvRel")
     val n = s.read.parquet(s"$path/$dvRel").count()
     if (n == 0L) { rmDir(s"$path/$dvRel"); return 0L }
     ManifestFileIndex.commitDelta(path, partCol, base, Seq.empty, Set.empty,
@@ -1204,7 +1195,8 @@ object LakeIO {
             Seq("_dv_file", "_dv_pos"), "left_anti")
         val token = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
         val dvRel = s"_graft_dv/dv-$token"
-        fresh.write.mode("errorifexists").parquet(s"$path/$dvRel")
+        fresh.write.options(LocalFs.WriteOptions).mode("errorifexists")
+          .parquet(s"$path/$dvRel")
         val n = s.read.parquet(s"$path/$dvRel").count()
         if (n == 0L) { rmDir(s"$path/$dvRel"); None } else Some((dvRel, n))
       }
@@ -1214,11 +1206,7 @@ object LakeIO {
     val withHour = hourPartitioned(updates)
     val token = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
     val stage = path + s"_stage_m$token"
-    clusterByPart(withHour, "ts_hour")
-      .write.mode("overwrite")
-      .partitionBy("ts_hour")
-      .option("compression", "zstd")
-      .parquet(stage)
+    writeStage(withHour, "ts_hour", stage)
     val appended = moveStaged(path, partCol, stage, s"m$token-")
 
     // ONE atomic commit: the DV and the appended rows become visible
@@ -1268,7 +1256,8 @@ object LakeIO {
       val token = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
       val dvRel = s"_graft_dv/dv-$token"
       matched.select($"_dv_file", $"_dv_pos")
-        .write.mode("errorifexists").parquet(s"$path/$dvRel")
+        .write.options(LocalFs.WriteOptions).mode("errorifexists")
+        .parquet(s"$path/$dvRel")
       val n = s.read.parquet(s"$path/$dvRel").count()
       if (n == 0L) { rmDir(s"$path/$dvRel"); return 0L }
       // old-row snapshot semantics: all RHS computed before any column
@@ -1282,11 +1271,7 @@ object LakeIO {
         .drop("_dv_file", "_dv_pos", "ts_hour")
       val withHour = hourPartitioned(updated)
       val stage = path + s"_stage_u$token"
-      clusterByPart(withHour, "ts_hour")
-        .write.mode("overwrite")
-        .partitionBy("ts_hour")
-        .option("compression", "zstd")
-        .parquet(stage)
+      writeStage(withHour, "ts_hour", stage)
       val appended = moveStaged(path, partCol, stage, s"u$token-")
       ManifestFileIndex.commitDelta(path, partCol, base, appended, Set.empty,
         addDvs = Seq(dvRel),
@@ -1466,12 +1451,7 @@ object LakeIO {
     import org.apache.spark.sql.graft.ManifestFileIndex
     val v = ManifestFileIndex.headVersion(path).getOrElse(0) + 1
     val stage = path + s"_stage_v$v"
-    val clusterFn =
-      if (cluster != null) cluster
-      else (df: DataFrame) => clusterByPart(df, partCol)
-    clusterFn(rewritten)
-      .write.mode("overwrite").partitionBy(partCol)
-      .option("compression", "zstd").parquet(stage)
+    writeStage(rewritten, partCol, stage, cluster)
     val newEntries = moveStaged(path, partCol, stage, s"m$v-", validate)
     ManifestFileIndex.commitEntries(path, partCol, untouched ++ newEntries)
   }
@@ -1517,9 +1497,7 @@ object LakeIO {
       }
     if (tableSchema(path).isEmpty) writeSchemaFile(path, batch.schema)
     val stage = path + s"_stage_b$batchId"
-    clusterByPart(batch, "ts_hour")
-      .write.mode("overwrite").partitionBy("ts_hour")
-      .option("compression", "zstd").parquet(stage)
+    writeStage(batch, "ts_hour", stage)
     // streaming batches obey table CHECK constraints like any append; a
     // violating micro-batch fails the query before anything moves or
     // commits (foreachBatch surfaces the error; the table is untouched).
@@ -2257,9 +2235,7 @@ object LakeIO {
       withPositions = false)
     val token = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
     val stage = path + s"_stage_e$token"
-    clusterByPart(df, "ts_hour")
-      .write.mode("overwrite").partitionBy("ts_hour")
-      .option("compression", "zstd").parquet(stage)
+    writeStage(df, "ts_hour", stage)
     val appended = moveStaged(path, partCol, stage, s"e$token-",
       validate = false) // era rewrite carries rows; they were validated on entry
     // Convergence must also converge the SCHEMA FILE: a day-origin table
@@ -2302,8 +2278,9 @@ object LakeIO {
 
   /** Whole-row maintenance read for CoW rewrites (compaction, Z-order).
     * Plain never-renamed single-era tables read raw with basePath
-    * partition recovery (schema-agnostic). Renamed or mixed-era tables
-    * MUST read through the mapping — a raw multi-file read of mixed
+    * partition recovery, under the table schema when `_graft_schema.json`
+    * exists (no footer-inference job per rewrite). Renamed or mixed-era
+    * tables MUST read through the mapping — a raw multi-file read of mixed
     * physical schemas silently null-fills whichever generation the
     * inferred schema misses — and the rewrite then naturally converges
     * the touched files to current names/era. Output always carries the
@@ -2313,10 +2290,11 @@ object LakeIO {
       entries: Seq[org.apache.spark.sql.graft.ManifestFileIndex.Entry])
     : DataFrame = {
     val mixedEra = entries.exists(!_.relPath.startsWith(partCol + "="))
-    if (columnHistories(path).isEmpty && !mixedEra)
-      s.read.option("basePath", path)
+    if (columnHistories(path).isEmpty && !mixedEra) {
+      val reader = s.read.option("basePath", path)
+      tableSchema(path).fold(reader)(reader.schema)
         .parquet(entries.map(e => path + "/" + e.relPath): _*)
-    else {
+    } else {
       val base = mappedScan(s, path, entries.map(_.relPath),
         tableSchema(path), withPositions = false)
       if (partCol == "ts_day") dayPartitioned(base.drop("ts_hour")) else base
@@ -3260,7 +3238,8 @@ object LakeIO {
         Tables.events(s, d)
           .select($"event_id", date_format($"ts", "yyyy-MM-dd HH:mm:ss").as("ts_str"),
             $"event_type", $"value")
-          .write.mode("overwrite").option("header", "true").csv(path)
+          .write.options(LocalFs.WriteOptions)
+          .mode("overwrite").option("header", "true").csv(path)
         s.read.option("header", "true")
           .schema("event_id LONG, ts_str STRING, event_type STRING, value DOUBLE")
           .csv(path)
@@ -3277,7 +3256,7 @@ object LakeIO {
         val path = "/tmp/graft_fmt/" + d.replaceAll("[^A-Za-z0-9.]", "_") + "/events_jsonl"
         Tables.events(s, d)
           .select($"event_id", $"event_type", $"value", $"user_id")
-          .write.mode("overwrite").json(path)
+          .write.options(LocalFs.WriteOptions).mode("overwrite").json(path)
         s.read
           .schema("event_id LONG, event_type STRING, value DOUBLE, user_id LONG")
           .json(path)
@@ -3296,7 +3275,8 @@ object LakeIO {
         val path = "/tmp/graft_fmt/" + d.replaceAll("[^A-Za-z0-9.]", "_") + "/events_orc"
         Tables.events(s, d)
           .select($"event_id", $"ts", $"event_type", $"value")
-          .write.mode("overwrite").option("compression", "zstd").orc(path)
+          .write.options(LocalFs.WriteOptions)
+          .mode("overwrite").option("compression", "zstd").orc(path)
         s.read.orc(path)
           .select($"event_id", $"ts", $"event_type", $"value")
           .orderBy($"event_id")

@@ -73,5 +73,6 @@ object ZOrder {
       .repartitionByRange(numFiles, $"zval")
       .sortWithinPartitions($"zval")
       .drop("zval")
-      .write.mode("overwrite").option("compression", "zstd").parquet(path)
+      .write.options(LocalFs.WriteOptions)
+      .mode("overwrite").option("compression", "zstd").parquet(path)
 }

@@ -3,6 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.LocalFs
+
 /** The generic EXACTLY-ONCE micro-batch append machinery shared by every
   * streaming-maintained derived index (ANN cells: [[StreamingAnn]];
   * inverted-index postings: [[StreamingPostings]]). One index directory
@@ -54,8 +56,8 @@ object BatchLedgerIndex {
       val r = rows.repartition(col(pc))
       val s = if (l.sortCols.isEmpty) r
         else r.sortWithinPartitions((pc +: l.sortCols).map(col): _*)
-      s.write.partitionBy(pc)
-    case None => rows.coalesce(1).write
+      s.write.options(LocalFs.WriteOptions).partitionBy(pc)
+    case None => rows.coalesce(1).write.options(LocalFs.WriteOptions)
   }
 
   private def ledgerFile(indexDir: String, ledgerName: String) =

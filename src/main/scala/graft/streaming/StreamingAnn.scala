@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.Similarity
+import graft.sources.LocalFs
 
 /** STREAMING ANN index maintenance — the continuous form of the r11
   * incremental-IVF invariant: embedding batches arrive on a stream, each
@@ -213,7 +214,7 @@ object StreamingAnn {
     * the dir stays self-contained.
     */
   def writeCentroids(indexDir: String, centroids: DataFrame): Unit =
-    centroids.coalesce(1).write.mode("overwrite")
+    centroids.coalesce(1).write.options(LocalFs.WriteOptions).mode("overwrite")
       .parquet(indexDir + "/centroids")
 
   /** ANN top-k served from an index DIRECTORY — the SQL statement's

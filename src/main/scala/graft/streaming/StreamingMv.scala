@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
 
-import graft.sources.LakeIO
+import graft.sources.{LakeIO, LocalFs}
 import graft.syntax._
 
 /** CONTINUOUS materialized-view maintenance: the lake's change data feed
@@ -109,6 +109,7 @@ object StreamingMv {
         .option("versionAsOf", toV.toString).load(basePath)
         .join(broadcast(hours), Seq("ts_hour")))
     next.repartition(col("ts_hour")).sortWithinPartitions($"ts_hour")
-      .write.mode("overwrite").option("compression", "zstd").parquet(outDir)
+      .write.options(LocalFs.WriteOptions)
+      .mode("overwrite").option("compression", "zstd").parquet(outDir)
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.RetrievalOps
+import graft.sources.LocalFs
 import graft.syntax._
 
 /** STREAMING inverted-index maintenance — [[StreamingAnn]]'s sibling for
@@ -226,7 +227,8 @@ object StreamingPostings {
       .withColumn("tbucket",
         pmod(xxhash64($"doc_id"), lit(TombBuckets.toLong)).cast("int"))
     val stage = indexDir + "_stage_tombmig"
-    rows.repartition(col("tbucket")).write.partitionBy("tbucket")
+    rows.repartition(col("tbucket")).write.options(LocalFs.WriteOptions)
+      .partitionBy("tbucket")
       .mode("overwrite").parquet(stage)
     val base = new java.io.File(indexDir, "tombstones")
     Option(new java.io.File(stage).listFiles()).getOrElse(Array.empty)

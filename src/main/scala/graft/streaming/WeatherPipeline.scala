@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.sources.LocalFs
 import graft.syntax._
 
 /** Streaming parity with the reference's speed layer
@@ -166,6 +167,7 @@ object WeatherPipeline {
       .outputMode("append")
       .trigger(trigger)
       .option("checkpointLocation", checkpoint)
+      .options(LocalFs.WriteOptions)
       .option("compression", "zstd")
       .partitionBy("ts_hour")
       .format("parquet")

@@ -554,12 +554,15 @@ object ManifestFileIndex {
     * writeLake/CoW commit (the dominant cost of the cold fixture
     * prebuild). Footer reads are independent and read-only; a bounded
     * pool keeps the walk deterministic (ordered futures) while using
-    * the cores the driver already owns.
+    * the cores the driver already owns. The walk shares ONE Hadoop conf
+    * for opening files and for the reader's options: a fresh
+    * `Configuration` parses core-default.xml on first use (~8 ms).
     */
   def footerStatsAll(files: Seq[java.io.File])
     : Seq[(Map[String, (Long, Long)], Map[String, (String, String)],
            Map[String, (Double, Double)], Long)] = {
-    if (files.lengthCompare(2) < 0) return files.map(footerStats)
+    val conf = new org.apache.hadoop.conf.Configuration()
+    if (files.lengthCompare(2) < 0) return files.map(footerStats(_, conf))
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.min(16, Runtime.getRuntime.availableProcessors()))
     try {
@@ -567,7 +570,7 @@ object ManifestFileIndex {
         pool.submit(new java.util.concurrent.Callable[
           (Map[String, (Long, Long)], Map[String, (String, String)],
            Map[String, (Double, Double)], Long)] {
-          def call() = footerStats(f)
+          def call() = footerStats(f, conf)
         })
       }
       futs.map(_.get())
@@ -580,15 +583,16 @@ object ManifestFileIndex {
     * truncation (if any) keeps bounds valid: a truncated min is a prefix
     * (≤ every value), a truncated max has its last byte incremented.
     */
-  def footerStats(file: java.io.File)
+  private def footerStats(file: java.io.File,
+      conf: org.apache.hadoop.conf.Configuration)
     : (Map[String, (Long, Long)], Map[String, (String, String)],
        Map[String, (Double, Double)], Long) = {
     import scala.jdk.CollectionConverters._
     try {
       val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
         org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new Path(file.getAbsolutePath),
-          new org.apache.hadoop.conf.Configuration()))
+          new Path(file.getAbsolutePath), conf),
+        org.apache.parquet.HadoopReadOptions.builder(conf).build())
       try {
         val acc = scala.collection.mutable.Map.empty[String, (Long, Long)]
         val sacc = scala.collection.mutable.Map.empty[String, (String, String)]
