@@ -1,9 +1,9 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, lit, to_timestamp}
 
 import graft.operators.{CorpusOps, CurationOps, Dedup, RetrievalOps, Similarity, TemporalJoins, TextOps}
-import graft.plans.HourPartitionPruning
 import graft.sources.LakeIO
 import graft.streaming.{StreamingDedup, WeatherPipeline}
 
@@ -14,8 +14,9 @@ import graft.streaming.{StreamingDedup, WeatherPipeline}
   *
   * {{{
   * import graft.Graft
-  * Graft.install(spark)                       // hidden-partition pruning
+  * Graft.install(spark)                       // DV rule, as-of join, vector_dot
   * Graft.lake.write(events, "/lake/events")   // hour-partitioned ZSTD
+  * Graft.lake.read(spark, "/lake/events")     // hidden hour(ts) pruning
   * Graft.dedup.nearDups(corpus, 0.8)          // MinHash+LSH near-dups
   * Graft.similarity.topK(embeddings, 5, 10)   // cosine top-k
   * }}}
@@ -29,7 +30,6 @@ object Graft {
     if (!spark.experimental.extraOptimizations.contains(graft.plans.ApplyDeletionVectors))
       spark.experimental.extraOptimizations =
         graft.plans.ApplyDeletionVectors +: spark.experimental.extraOptimizations
-    HourPartitionPruning.install(spark)
     graft.plans.AsOfJoinStrategy.install(spark)
     org.apache.spark.sql.GraftBridge.registerFunction(spark, "vector_dot",
       new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
@@ -54,22 +54,21 @@ object Graft {
   object lake {
     /** Hour-partitioned ZSTD parquet write (expects a `ts` column). */
     def write(df: DataFrame, path: String): Unit = LakeIO.writeLake(df, path)
-    /** Partition-pruned range scan over a lake table. */
-    def scan(spark: SparkSession, path: String, startTs: String, endTs: String): DataFrame =
-      LakeIO.prunedScan(spark, path, startTs, endTs)
-    /** Hidden-partition V2 read: raw `ts` predicates prune directories at
-      * the source (`GraftLakeSource`), no session rule needed.
+    /** The lake's live rows (the current snapshot's manifest decides
+      * which files are read). Raw `ts` predicates prune hour partitions
+      * at the source (`GraftLakeSource`), no session rule needed.
       */
     def read(spark: SparkSession, path: String): DataFrame =
       spark.read.format("graft-lake").load(path)
+    /** `[startTs, endTs)` range read: [[read]] filtered on `ts`. */
+    def scan(spark: SparkSession, path: String, startTs: String, endTs: String): DataFrame =
+      read(spark, path).where(col("ts") >= to_timestamp(lit(startTs)) &&
+        col("ts") < to_timestamp(lit(endTs)))
     /** Schema-evolving append: new nullable columns widen the table
-      * metadata; readers get the union without a mergeSchema sweep.
+      * metadata; [[read]] gets the union without a mergeSchema sweep.
       */
     def evolveAppend(df: DataFrame, path: String): Unit =
       LakeIO.evolveAppend(df, path)
-    /** Read with the evolved union schema from table metadata. */
-    def readEvolved(spark: SparkSession, path: String): DataFrame =
-      LakeIO.readEvolved(spark, path)
     /** Time travel: read the lake as of a committed snapshot version
       * (frozen manifest + frozen schema; appends never delete files).
       */
@@ -177,8 +176,9 @@ object Graft {
       */
     def expireSnapshots(path: String, keepLast: Int): Int =
       org.apache.spark.sql.graft.ManifestFileIndex.expireSnapshots(path, keepLast)
-    /** Snapshot-safe compaction: rewrite fragmented partitions as single
-      * files without invalidating earlier snapshots.
+    /** Snapshot-safe compaction ([[LakeIO.compactSnapshots]]): rewrite
+      * fragmented partitions as single files in a new snapshot; earlier
+      * snapshots stay readable.
       */
     def compact(spark: SparkSession, path: String): Unit =
       LakeIO.compactSnapshots(spark, path)

@@ -6,17 +6,17 @@ import org.apache.spark.sql.functions._
 import graft.Op
 import graft.syntax._
 
-/** S6/S7 — the batch-lake layer: hour-partitioned ZSTD parquet write +
-  * partition-pruned read (reference: trino/sql/init-tables.sql:1-12
+/** S6/S7 — the batch-lake layer: hour-partitioned ZSTD parquet writes
+  * committed as snapshots (reference: trino/sql/init-tables.sql:1-12
   * `partitioning = ARRAY['hour(ts)']`, format PARQUET + ZSTD;
   * kafka-connect/register-connector.sh:40 `hours(ts)` transform).
   *
   * Iceberg's *hidden* hour(ts) partitioning becomes an explicit
-  * `ts_hour=yyyy-MM-dd-HH` directory partition column; `prunedScan`
-  * rewrites a `ts` range predicate into the aligned `ts_hour` range so
-  * Catalyst prunes directories instead of listing every partition — at
-  * 100 TB this is the difference between touching 24 directories and
-  * touching 8760.
+  * `ts_hour=yyyy-MM-dd-HH` directory partition column. Every commit
+  * goes through the snapshot manifest (`ManifestFileIndex`), which alone
+  * decides which files are live; the graft-lake V2 source reads through
+  * it and rewrites a `ts` range predicate into the aligned `ts_hour`
+  * range, so a query touches 24 hour directories, not 8760.
   */
 object LakeIO {
 
@@ -226,80 +226,16 @@ object LakeIO {
     org.apache.spark.sql.graft.ManifestFileIndex.commit(path, "ts_hour")
   }
 
-  /** Metadata commit after an external append (streaming foreachBatch):
-    * keeps any already-evolved union schema, else records the batch's.
-    */
-  def commitAfterAppend(path: String,
-      batchSchema: org.apache.spark.sql.types.StructType): Unit = {
-    if (tableSchema(path).isEmpty) writeSchemaFile(path, batchSchema)
-    org.apache.spark.sql.graft.ManifestFileIndex.commitAppended(path, "ts_hour")
-  }
-
-  /** V1 parquet reader for a lake path with the COMMITTED schema (when a
-    * `_graft_schema.json` exists — every writeLake/commit leaves one):
-    * skips parquet footer schema inference on every query. Partition-
-    * directory discovery remains, which is why the manifest-planned V2
-    * source stays ~10× faster; this removes the avoidable half of the
-    * per-query listing cost. Falls back to inference for foreign
-    * parquet directories with no commit metadata.
-    */
-  private def v1Read(s: SparkSession, path: String) =
-    tableSchema(path).fold(s.read)(s.read.schema)
-
-  /** Read back with a [start, end) `ts` range, pruned via `ts_hour`. The
-    * extra ts_hour bounds are the hour-truncations of the range endpoints,
-    * so the rewrite is exactly Iceberg's hidden-partition pruning.
-    */
-  def prunedScan(s: SparkSession, path: String, startTs: String, endTs: String): DataFrame = {
-    val startHour = startTs.take(13).replace(' ', '-')
-    val endHour   = endTs.take(13).replace(' ', '-')
-    v1Read(s, path).parquet(path)
-      .where($"ts_hour" >= startHour && $"ts_hour" <= endHour)
-      .where($"ts" >= to_timestamp(lit(startTs)) && $"ts" < to_timestamp(lit(endTs)))
-  }
-
-  /** Compact a fragmented lake partition-by-partition: rewrite each
-    * `ts_hour` directory's many small files into ~`targetBytes` files —
-    * the maintenance job every streaming-ingested lake needs (micro-batch
-    * commits at 10 s cadence fragment badly; reference:
-    * register-connector.sh:30). Clustering by ts_hour keeps the rewrite
-    * one-file-per-partition-per-task, same as [[writeLake]].
-    */
-  def compact(s: SparkSession, path: String, targetBytes: Long = 256L << 20): Unit = {
-    // Legacy WHOLE-DIRECTORY swap: correct only for plain parquet lakes.
-    // On a V2 (snapshot-chain) table it would destroy time travel and the
-    // DV sidecars — and live deletion vectors would be RESURRECTED (the
-    // raw read sees the files, not the logical state). Refuse both;
-    // [[compactSnapshots]] is the snapshot-safe maintenance path.
-    requireNoDvs(path, "compact")
-    require(!new java.io.File(path,
-        org.apache.spark.sql.graft.ManifestFileIndex.SnapshotDir).exists(),
-      s"compact: $path is a snapshot-chain (V2) lake — the legacy directory " +
-        "swap would invalidate its snapshots; use LakeIO.compactSnapshots")
-    val df = s.read.parquet(path)
-    val tmp = path + "_compacting"
-    writeStage(df, "ts_hour", tmp)
-    val dir = new java.io.File(path)
-    val bak = new java.io.File(path + "_old")
-    dir.renameTo(bak)
-    new java.io.File(tmp).renameTo(dir)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-    }
-    rm(bak)
-    org.apache.spark.sql.graft.ManifestFileIndex.commit(path, "ts_hour")
-  }
-
   /** Write-side schema evolution (S6 parity with the reference's
     * `evolve-schema-enabled`, register-connector.sh:29): the table's
     * evolved schema lives in a `_graft_schema.json` metadata file, updated
     * transactionally-enough for a single-writer lake (write-new + rename).
     * Appends may ADD nullable columns; type changes are rejected loudly.
     *
-    * Readers ([[readEvolved]], and the graft-lake V2 source's schema
-    * inference) take the union schema from metadata — one tiny file read —
-    * instead of a `mergeSchema` footer sweep over every data file, which
-    * at 100 TB is a driver-side listing+footer job over ~10^5 files.
+    * The graft-lake V2 source's schema inference takes the union schema
+    * from metadata — one tiny file read — instead of a `mergeSchema`
+    * footer sweep over every data file, which at 100 TB is a driver-side
+    * listing+footer job over ~10^5 files.
     * Parquet scans null-fill columns absent from old files natively.
     */
   def evolveAppend(df: DataFrame, path: String): Unit = {
@@ -713,16 +649,6 @@ object LakeIO {
     out
   }
 
-  /** Read with the evolved union schema from table metadata (no
-    * mergeSchema sweep); falls back to plain inference for pre-evolution
-    * lakes.
-    */
-  def readEvolved(s: SparkSession, path: String): DataFrame =
-    tableSchema(path) match {
-      case Some(schema) => s.read.schema(schema).parquet(path)
-      case None         => s.read.parquet(path)
-    }
-
   /** Snapshot-safe OPTIMIZE ZORDER (Delta/Iceberg `OPTIMIZE ... ZORDER BY`
     * parity): rewrite every partition's rows clustered on the Morton curve
     * of (colA, colB) into ~`filesPerPartition` files per partition, through
@@ -758,13 +684,13 @@ object LakeIO {
         .drop("zval"))
   }
 
-  /** Snapshot-safe compaction: partitions fragmented into multiple files
-    * (the 10 s-cadence streaming sink's signature) are rewritten as new
-    * single files through the same copy-on-write tail as merge/delete —
-    * single-file partitions carry their entries over untouched, old
-    * fragments stay on disk for earlier snapshots until
-    * `expireSnapshots` vacuums them. Unlike [[compact]] (directory swap,
-    * for manifest-less V1 lakes), this preserves time travel.
+  /** The lake's compaction (`Graft.lake.compact`, SQL `OPTIMIZE`):
+    * partitions fragmented into multiple files (the 10 s-cadence
+    * streaming sink's signature) are rewritten as new single files
+    * through the same copy-on-write tail as merge/delete, committed as a
+    * new snapshot. Single-file partitions carry their entries over
+    * untouched; old fragments stay on disk for earlier snapshots until
+    * `expireSnapshots` vacuums them, so time travel keeps working.
     */
   def compactSnapshots(s: SparkSession, path: String): Unit = {
     requireNoDvs(path, "compactSnapshots")
@@ -1554,7 +1480,8 @@ object LakeIO {
     val added = to.filterNot(e => from.contains(e.relPath))
     val dvToP = ManifestFileIndex.readDvs(path, Some(toV))
     if (added.isEmpty)
-      hourPartitioned(readEvolved(s, path)).limit(0)
+      hourPartitioned(s.read.format("graft-lake")
+        .option("versionAsOf", toV.toString).load(path)).limit(0)
     else if (dvToP.isEmpty)
       hourPartitioned(s.read.parquet(added.map(e => path + "/" + e.relPath): _*))
     else {
@@ -3102,7 +3029,7 @@ object LakeIO {
     Op("scan_partitioned",
       (s, d) => {
         val path = ensureLake(s, d)
-        prunedScan(s, path, "2024-01-05 00:00:00", "2024-01-06 00:00:00")
+        graft.Graft.lake.scan(s, path, "2024-01-05 00:00:00", "2024-01-06 00:00:00")
           .select($"event_id", $"ts", $"event_type", $"value")
           .orderBy($"event_id")
       },
@@ -3207,26 +3134,6 @@ object LakeIO {
       """SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, event_type, value
         |FROM events
         |WHERE event_id >= 200 AND event_id < 450
-        |ORDER BY event_id""".stripMargin),
-
-    // Session-rule variant of hidden pruning (HourPartitionPruning
-    // optimizer Rule over a plain V1 parquet scan) — the path for lakes
-    // read WITHOUT the graft-lake source, e.g. through an existing
-    // catalog. Same semantics, pruning proved separately in LakeIOSpec.
-    Op("scan_partitioned_rule",
-      (s, d) => {
-        val path = ensureLake(s, d)
-        graft.plans.HourPartitionPruning.install(s)
-        v1Read(s, path).parquet(path)
-          .where($"ts" >= to_timestamp(lit("2024-01-12 00:00:00"))
-            && $"ts" < to_timestamp(lit("2024-01-13 00:00:00")))
-          .select($"event_id", $"ts", $"event_type", $"value")
-          .orderBy($"event_id")
-      },
-      """SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, event_type, value
-        |FROM events
-        |WHERE CAST(ts AS TIMESTAMP) >= TIMESTAMP '2024-01-12 00:00:00'
-        |  AND CAST(ts AS TIMESTAMP) <  TIMESTAMP '2024-01-13 00:00:00'
         |ORDER BY event_id""".stripMargin),
 
     // Source-format breadth: CSV sink → source roundtrip (identity vs the

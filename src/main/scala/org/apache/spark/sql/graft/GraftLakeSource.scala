@@ -1,6 +1,9 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression}
+import java.time.{Instant, ZoneOffset}
+import java.time.format.DateTimeFormatter
+
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, EndsWith, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, Hour, LessThan, LessThanOrEqual, Literal, PredicateHelper}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.expressions.aggregate.Aggregation
@@ -9,10 +12,8 @@ import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownA
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
 import org.apache.spark.sql.execution.datasources.v2.parquet.{ParquetDataSourceV2, ParquetScanBuilder, ParquetTable}
 import org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters
-import org.apache.spark.sql.types.{StringType, StructType, TimestampType}
+import org.apache.spark.sql.types.{IntegerType, StringType, StructType, TimestampType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-
-import graft.plans.HourPartitionPruning
 
 /** DataSourceV2 table for the graft lake — Iceberg-style HIDDEN hour(ts)
   * partitioning carried by the source itself (reference:
@@ -20,15 +21,16 @@ import graft.plans.HourPartitionPruning
   * Trino prunes raw-`ts` predicates because the Iceberg catalog tracks the
   * transform; here the V2 scan builder does).
   *
-  * `spark.read.format("graft-lake").load(path)` plans a V2 `BatchScan`
-  * whose pushdown intercepts the Catalyst filters: any `ts` range/equality
-  * predicate is rewritten into the implied `ts_hour` directory predicate
-  * and pushed as a PARTITION filter, so directory pruning happens at the
-  * source — before file listing — rather than via the session-installed
-  * optimizer rule ([[graft.plans.HourPartitionPruning]] remains for plain
-  * `spark.read.parquet` scans). At 100 TB this is the difference between
-  * listing 8760 hour directories and listing the handful the query needs,
-  * with no session configuration required.
+  * `spark.read.format("graft-lake").load(path)` is the lake's one
+  * reader. It plans a V2 `BatchScan` from the snapshot manifest, which
+  * alone decides which files are live (copy-on-write generations kept on
+  * disk for time travel are never read at head). Its pushdown intercepts
+  * the Catalyst filters: any `ts` range or `hour(ts)` equality predicate
+  * is rewritten into the implied `ts_hour` predicate ([[GraftLakeSource.derive]])
+  * and pushed as a PARTITION filter, so pruning happens at the source,
+  * before any file is planned. At 100 TB this is the difference between
+  * planning 8760 hour directories and the handful the query needs, with
+  * no session configuration required.
   *
   * Everything below the boundary delegates to Spark's own V2 parquet
   * machinery (vectorized reader, column pruning, parquet data-filter
@@ -37,6 +39,48 @@ import graft.plans.HourPartitionPruning
   * partitioning lacks.
   */
 object GraftLakeSource {
+  private val hourFmt =
+    DateTimeFormatter.ofPattern("yyyy-MM-dd-HH").withZone(ZoneOffset.UTC)
+
+  private def hourLit(micros: Long): Literal = Literal.create(
+    hourFmt.format(Instant.ofEpochSecond(Math.floorDiv(micros, 1000000L))),
+    StringType)
+
+  /** The `ts_hour` predicate implied by one conjunct on `ts` (UTC
+    * session, `ts_hour = date_format(ts, 'yyyy-MM-dd-HH')`):
+    *  - `ts >= T` / `ts > T` → `ts_hour >= hour_str(T)` (truncation-safe)
+    *  - `ts <= T` / `ts < T` → `ts_hour <= hour_str(T)`
+    *  - `hour(ts) = k`       → `ts_hour` ends with `-kk`
+    * in either operand order. Anything else implies nothing.
+    */
+  def derive(e: Expression, ts: Attribute, hr: Attribute): Option[Expression] =
+    e match {
+      case GreaterThanOrEqual(a: Attribute, Literal(v: Long, TimestampType))
+          if a.semanticEquals(ts) => Some(GreaterThanOrEqual(hr, hourLit(v)))
+      case GreaterThan(a: Attribute, Literal(v: Long, TimestampType))
+          if a.semanticEquals(ts) => Some(GreaterThanOrEqual(hr, hourLit(v)))
+      case LessThanOrEqual(a: Attribute, Literal(v: Long, TimestampType))
+          if a.semanticEquals(ts) => Some(LessThanOrEqual(hr, hourLit(v)))
+      case LessThan(a: Attribute, Literal(v: Long, TimestampType))
+          if a.semanticEquals(ts) => Some(LessThanOrEqual(hr, hourLit(v)))
+      // mirrored operand order
+      case GreaterThanOrEqual(Literal(v: Long, TimestampType), a: Attribute)
+          if a.semanticEquals(ts) => Some(LessThanOrEqual(hr, hourLit(v)))
+      case LessThanOrEqual(Literal(v: Long, TimestampType), a: Attribute)
+          if a.semanticEquals(ts) => Some(GreaterThanOrEqual(hr, hourLit(v)))
+      case GreaterThan(Literal(v: Long, TimestampType), a: Attribute)
+          if a.semanticEquals(ts) => Some(LessThanOrEqual(hr, hourLit(v)))
+      case LessThan(Literal(v: Long, TimestampType), a: Attribute)
+          if a.semanticEquals(ts) => Some(GreaterThanOrEqual(hr, hourLit(v)))
+      case EqualTo(h: Hour, Literal(k: Int, IntegerType))
+          if h.child.semanticEquals(ts) =>
+        Some(EndsWith(hr, Literal.create(f"-$k%02d", StringType)))
+      case EqualTo(Literal(k: Int, IntegerType), h: Hour)
+          if h.child.semanticEquals(ts) =>
+        Some(EndsWith(hr, Literal.create(f"-$k%02d", StringType)))
+      case _ => None
+    }
+
   /** `timestampAsOf` accepts epoch millis or a UTC timestamp string.
     * Public: the DV-application rule resolves reader options with it.
     */
@@ -357,8 +401,8 @@ class GraftLakeTable(inner: ParquetTable,
     * `LakeIO.evolveAppend` (INSERT INTO) or `LakeIO.overwriteLake`
     * (INSERT OVERWRITE — full replace as one new snapshot, old
     * generation parked for time travel): hour-clustered layout, schema
-    * evolution rules, and the reconcile-commit (snapshot + HEAD advance)
-    * all apply to SQL writes exactly as to programmatic ones.
+    * evolution rules, and the snapshot commit (new snapshot + HEAD
+    * advance) all apply to SQL writes exactly as to programmatic ones.
     */
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     rootDir match {
@@ -424,7 +468,7 @@ class GraftLakeTable(inner: ParquetTable,
 
 /** The interception point: `pushFilters` receives the query's Catalyst
   * predicates, derives the implied `ts_hour` partition predicates from raw
-  * `ts` bounds (same derivation as [[HourPartitionPruning]]), and hands
+  * `ts` bounds ([[GraftLakeSource.derive]]), and hands
   * the augmented set to the parquet scan builder — which classifies the
   * derived conjuncts as partition filters (consumed at file listing) and
   * returns the originals as the post-scan residual, preserving exact
@@ -434,7 +478,8 @@ class GraftLakeScanBuilder(inner: ParquetScanBuilder,
     deriveHour: Boolean = true) extends ScanBuilder
     with SupportsPushDownCatalystFilters
     with SupportsPushDownRequiredColumns
-    with SupportsPushDownAggregates {
+    with SupportsPushDownAggregates
+    with PredicateHelper {
 
   override def pushFilters(filters: Seq[Expression]): Seq[Expression] = {
     val tsAttr = filters.flatMap(_.references.toSeq)
@@ -445,8 +490,8 @@ class GraftLakeScanBuilder(inner: ParquetScanBuilder,
         // partition filters bind by NAME against the partition schema at
         // file-listing time, so a fresh exprId is fine here
         val hr = AttributeReference("ts_hour", StringType)()
-        filters.flatMap(HourPartitionPruning.splitConjuncts)
-          .flatMap(HourPartitionPruning.derive(_, ts, hr))
+        filters.flatMap(splitConjunctivePredicates)
+          .flatMap(GraftLakeSource.derive(_, ts, hr))
       case _ => Seq.empty
     }
     inner.pushFilters(filters ++ derived)

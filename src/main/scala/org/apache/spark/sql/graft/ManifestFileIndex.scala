@@ -769,11 +769,9 @@ object ManifestFileIndex {
     * not live at head but are still referenced by earlier snapshots
     * (copy-on-write old generations kept for time travel). Tracked as
     * `#parked` lines in the manifest itself, maintained by
-    * [[commitEntries]] — so reconciliation ([[commitAppended]]) reads ONE
-    * file instead of replaying every snapshot (O(V) metadata reads per
-    * commit, O(V²) cumulative — the pre-tracking behavior, kept as the
-    * fallback for manifests written before the `#parkedv` marker).
-    * Returns None when the manifest predates parked tracking.
+    * [[commitEntries]], which carries the set forward from this one read.
+    * Returns None when the manifest predates parked tracking (no
+    * `#parkedv` marker).
     */
   def readParked(rootDir: String): Option[Set[String]] = {
     val f = new java.io.File(rootDir, ManifestName)
@@ -788,56 +786,6 @@ object ManifestFileIndex {
     }
   }
 
-  /** Commit after files were APPENDED in place to a manifest-defined lake:
-    * walk the directory, but treat as NEW only files absent from the
-    * current manifest's live AND parked sets. A plain walk-commit
-    * ([[commit]]) assumes every on-disk .parquet is live — on a lake that
-    * has seen a copy-on-write merge/delete, that would RESURRECT the old
-    * generations parked for time travel. Falls back to [[commit]] when no
-    * manifest exists yet, and to the full snapshot replay for manifests
-    * older than parked tracking.
-    *
-    * This is the RECONCILE api for writers the engine doesn't control
-    * (external parquet appends): an unknown file is by definition the
-    * payload here, so at-least-once external writers should prefer
-    * [[graft.sources.LakeIO.appendExactlyOnce]], whose batch-prefix
-    * ledger makes replays no-ops. Engine-internal appends
-    * (`LakeIO.evolveAppend`) stage-and-move with explicit entries and
-    * never reconcile.
-    */
-  def commitAppended(rootDir: String, partCol: String): Unit =
-    read(rootDir, None) match {
-      case None => commit(rootDir, partCol)
-      case Some((pc, current)) =>
-        val parked: Set[String] = readParked(rootDir).getOrElse {
-          // pre-tracking manifest: one last replay; this commit writes
-          // the #parked section and every later one reads it back
-          val head = headVersion(rootDir).getOrElse(0)
-          (1 to head).flatMap(v =>
-            read(rootDir, Some(v)).map(_._2.map(_.relPath)).getOrElse(Seq.empty))
-            .toSet -- current.map(_.relPath)
-        }
-        val known: Set[String] = current.map(_.relPath).toSet ++ parked
-        val root = new java.io.File(rootDir)
-        val fresh = Option(root.listFiles()).getOrElse(Array.empty)
-          .filter(d => d.isDirectory && d.getName.startsWith(pc + "="))
-          .sortBy(_.getName)
-          .flatMap { d =>
-            val pv = d.getName.substring(pc.length + 1)
-            Option(d.listFiles()).getOrElse(Array.empty)
-              .filter(f => f.isFile && f.getName.endsWith(".parquet") &&
-                !known.contains(d.getName + "/" + f.getName))
-              .sortBy(_.getName)
-              .map(f => (pv, d.getName, f))
-          }.toSeq
-        val appended = fresh.zip(footerStatsAll(fresh.map(_._3))).map {
-          case ((pv, dn, f), (ls, ss, ds, rc)) =>
-            Entry(pv, dn + "/" + f.getName,
-              f.length(), f.lastModified(), ls, ss, ds, rc)
-        }
-        commitEntries(rootDir, pc, current ++ appended, carryDvs = true)
-    }
-
   /** Commit an EXPLICIT live-file set — the copy-on-write path
     * (merge/delete): rewritten partitions contribute only their new
     * files while the old ones stay on disk for earlier snapshots, so a
@@ -845,8 +793,7 @@ object ManifestFileIndex {
     * the table state (Iceberg's manifest-defines-liveness semantics).
     */
   def commitEntries(rootDir: String, partCol: String, entries: Seq[Entry],
-      carryDvs: Boolean = false,
-      explicitDvs: Option[Seq[String]] = None): Unit = {
+      dvs: Seq[String] = Nil): Unit = {
     // parked bookkeeping: whatever was live before this commit but is not
     // live after it just became a parked old generation (kept on disk for
     // time travel). Carry the previous parked set forward, dropping paths
@@ -874,12 +821,10 @@ object ManifestFileIndex {
     val changedDirs = (prevByDir.keySet ++ newByDir.keySet)
       .filter(d => prevByDir.get(d) != newByDir.get(d))
     // full-state commits DROP deletion vectors by default (an overwrite
-    // or a DV-folding rewrite defines the complete new state); the
-    // external reconcile-append opts in to carrying them, and restore
-    // passes the restored snapshot's own DV set explicitly
+    // or a DV-folding rewrite defines the complete new state); restore
+    // passes the restored snapshot's own DV set
     val content = renderManifestSharded(rootDir, partCol, entries, parked,
-      explicitDvs.getOrElse(if (carryDvs) readDvs(rootDir) else Nil),
-      prevRefs, changedDirs)
+      dvs, prevRefs, changedDirs)
     // The VERSION claim goes through the same CAS as [[commitDelta]], so
     // even two "single-writer" commits racing can never share a snapshot
     // number or tear each other's snapshot files. The table STATE is
@@ -919,7 +864,7 @@ object ManifestFileIndex {
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
       tmp.renameTo(new java.io.File(rootDir, "_graft_schema.json")); ()
     }
-    commitEntries(rootDir, partCol, entries, explicitDvs = Some(dvs))
+    commitEntries(rootDir, partCol, entries, dvs)
   }
 
   /** CLONE the table at `srcRoot` — at snapshot `travel`, default head —
@@ -998,7 +943,7 @@ object ManifestFileIndex {
       java.nio.file.Files.copy(cons.toPath,
         new java.io.File(s"$dstRoot/$SnapshotDir", ConstraintsName).toPath); ()
     }
-    commitEntries(dstRoot, partCol, entries, explicitDvs = Some(dvs))
+    commitEntries(dstRoot, partCol, entries, dvs)
     (v, rels.size.toLong, bytes)
   }
 

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SharedSpark.spark
+import graft.SharedSpark.{spark, tempDir}
 
 /** The facade works over arbitrary user DataFrames — not just the
   * driver testdata.
@@ -41,7 +41,7 @@ class GraftFacadeSpec extends AnyFunSuite {
 
   test("lake write + pruned scan over a custom stream table") {
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft_facade_lake").toString
+    val dir = tempDir("facade_lake").toString
     val df = Seq(
       (1L, "2024-03-01 10:30:00"), (2L, "2024-03-01 11:30:00"),
       (3L, "2024-03-02 10:30:00"))

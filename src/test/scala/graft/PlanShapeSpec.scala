@@ -129,6 +129,36 @@ class PlanShapeSpec extends AnyFunSuite {
       }
   }
 
+  test("perfbench's lake_pruned_scan shape carries the ts_hour bounds in PartitionFilters") {
+    // the analytics benchmark's pruned lake read: raw ts bounds written
+    // as string casts, a projection and a sort over the graft-lake source
+    import org.apache.spark.sql.catalyst.expressions.{Attribute, GreaterThanOrEqual, LessThanOrEqual, Literal}
+    import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
+    import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan
+    val (from, to) = ("2024-01-05 00:00:00", "2024-01-06 00:00:00")
+    val df = Graft.lake.read(spark, graft.sources.LakeIO.ensureLake(spark, sf))
+      .where(col("ts") >= lit(from).cast("timestamp") && col("ts") < lit(to).cast("timestamp"))
+      .select("event_id", "ts", "event_type", "value", "user_id")
+      .orderBy("event_id")
+    val scan = df.queryExecution.optimizedPlan.collectFirst {
+      case r: DataSourceV2ScanRelation => r.scan
+    }.collect {
+      case p: ParquetScan => p
+      case g: org.apache.spark.sql.graft.GraftLakeScan => g.initial
+    }.getOrElse(fail("expected a graft-lake V2 scan"))
+    val bounds = scan.partitionFilters.collect {
+      case GreaterThanOrEqual(a: Attribute, Literal(v, _)) if a.name == "ts_hour" =>
+        ">=" -> String.valueOf(v)
+      case LessThanOrEqual(a: Attribute, Literal(v, _)) if a.name == "ts_hour" =>
+        "<=" -> String.valueOf(v)
+    }.toSet
+    assert(bounds === Set(">=" -> "2024-01-05-00", "<=" -> "2024-01-06-00"),
+      s"PartitionFilters: ${scan.partitionFilters.mkString(", ")}")
+    val expected = graft.sources.Tables.events(spark, sf)
+      .where(col("ts") >= lit(from).cast("timestamp") && col("ts") < lit(to).cast("timestamp"))
+    assert(df.count() === expected.count())
+  }
+
   test("no keyed query collects to the driver mid-plan") {
     // structural: every registered op returns a DataFrame whose plan is
     // pure Catalyst (a .collect() inside a query function would surface

@@ -1,9 +1,23 @@
 package graft
 
+import java.nio.file.{Files, Path}
+
 import org.apache.spark.sql.SparkSession
 
 /** One session for the whole forked test JVM. */
 object SharedSpark {
+  /** The test JVM's one temp root: every spec's scratch directory lives
+    * under it, and the whole tree is deleted when the JVM exits.
+    */
+  private lazy val tmpRoot: Path = {
+    val root = Files.createTempDirectory("graft_test")
+    sys.addShutdownHook(graft.sources.LakeIO.rmDir(root.toString))
+    root
+  }
+
+  /** A fresh directory under the JVM's temp root (`prefix` names it). */
+  def tempDir(prefix: String): Path = Files.createTempDirectory(tmpRoot, prefix)
+
   // Installed via `withExtensions` — NOT the `spark.sql.extensions` conf —
   // deliberately: this is the install path that leaves the conf unset, so
   // the whole suite exercises the scan guard's `ranIn`/probe detection
@@ -18,8 +32,7 @@ object SharedSpark {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.ansi.enabled", "false")
     .config("spark.ui.enabled", "false")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_wh").toString)
+    .config("spark.sql.warehouse.dir", tempDir("wh").toString)
     .getOrCreate()
 
   val sf: String = "/root/testdata/sf0.001"

@@ -3,7 +3,7 @@ package graft.operators
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.SharedSpark.{spark, sf}
+import graft.SharedSpark.{spark, sf, tempDir}
 import graft.syntax._
 
 /** The inverted-index serving contract: (1) the index answers EXACTLY
@@ -82,7 +82,7 @@ class RetrievalIndexSpec extends AnyFunSuite {
     assert(out.nonEmpty)
     assert(!out.exists(_.getLong(0) % 7 == 3), "deleted docs must never rank")
     // ground truth: an index REBUILT over the live corpus answers the same
-    val liveDir = java.nio.file.Files.createTempDirectory("graft_live_idx").toString
+    val liveDir = tempDir("live_idx").toString
     val live = graft.sources.Tables.documents(spark, sf).where($"doc_id" % 7 =!= 3)
     RetrievalOps.writeIndex(liveDir, live, "overwrite")
     val rebuilt = RetrievalOps.bm25TopKFromIndex(

@@ -3,7 +3,7 @@ package graft.plans
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.SharedSpark.spark
+import graft.SharedSpark.{spark, tempDir}
 import graft.sources.LakeIO
 
 /** The maintenance SQL statements (GraftSqlParser): OPTIMIZE [ZORDER],
@@ -14,7 +14,7 @@ import graft.sources.LakeIO
 class MaintenanceSqlSpec extends AnyFunSuite {
   import spark.implicits._
 
-  private val wh = java.nio.file.Files.createTempDirectory("graft_maint_wh").toString
+  private val wh = tempDir("maint_wh").toString
 
   private def attach(): Unit = {
     spark.conf.set("spark.sql.catalog.mcat",
@@ -230,7 +230,7 @@ class MaintenanceSqlSpec extends AnyFunSuite {
   }
 
   test("BM25 INDEX statement serves the probe through SQL, identical to the Scala surface") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_bm25_sql").toString
+    val dir = tempDir("bm25_sql").toString
     val docs = Seq(
       (1L, "vector join fast fast"), (2L, "vector slow slow join"),
       (3L, "window batch data"), (4L, "join join vector slow"),
@@ -251,7 +251,7 @@ class MaintenanceSqlSpec extends AnyFunSuite {
   test("full SQL index lifecycle: CREATE BM25 INDEX, query, OPTIMIZE, REBUCKET") {
     attach()
     val lake = s"$wh/default/bm25docs"
-    val idx = java.nio.file.Files.createTempDirectory("graft_bm25_life").toString + "/idx"
+    val idx = tempDir("bm25_life").toString + "/idx"
     val docs = Seq(
       (1L, "vector join fast fast"), (2L, "vector slow slow join"),
       (3L, "window batch data"), (4L, "join join vector slow"),
@@ -306,14 +306,14 @@ class MaintenanceSqlSpec extends AnyFunSuite {
       "the refused CREATE must leave the lake intact")
 
     // absent path: builds; re-CREATE over the now-index-shaped dir: ok
-    val idx = java.nio.file.Files.createTempDirectory("graft_bm25_guard")
+    val idx = tempDir("bm25_guard")
       .toString + "/idx"
     spark.sql(s"CREATE BM25 INDEX '$idx' FROM mcat.default.bm25guard")
     spark.sql(s"CREATE BM25 INDEX '$idx' FROM mcat.default.bm25guard")
     assert(new java.io.File(idx, "postings").isDirectory)
 
     // non-index junk dir: refused plainly, clobbered under OR REPLACE
-    val dirty = java.nio.file.Files.createTempDirectory("graft_bm25_dirty")
+    val dirty = tempDir("bm25_dirty")
       .toString
     java.nio.file.Files.write(
       new java.io.File(dirty, "precious.txt").toPath, "data".getBytes)
@@ -337,7 +337,7 @@ class MaintenanceSqlSpec extends AnyFunSuite {
   }
 
   test("REBUCKET on an empty index still flips the descriptor (appends must follow it)") {
-    val idx = java.nio.file.Files.createTempDirectory("graft_bm25_empty")
+    val idx = tempDir("bm25_empty")
       .toString + "/idx"
     val reb = spark.sql(s"ALTER BM25 INDEX '$idx' REBUCKET 256").collect().head
     assert(reb.getLong(2) === 256L,
@@ -348,7 +348,7 @@ class MaintenanceSqlSpec extends AnyFunSuite {
 
   test("DESCRIBE BM25 INDEX totals route through serving's correction (delete + re-insert)") {
     import graft.streaming.StreamingPostings
-    val base = java.nio.file.Files.createTempDirectory("graft_bm25_desc").toString
+    val base = tempDir("bm25_desc").toString
     val lake = s"$base/lake"
     val dir = s"$base/index"
     val docs = Seq(
@@ -386,7 +386,7 @@ class MaintenanceSqlSpec extends AnyFunSuite {
     import graft.operators.Similarity
     import graft.streaming.StreamingAnn
     val sf = graft.SharedSpark.sf
-    val base = java.nio.file.Files.createTempDirectory("graft_ann_sql").toString
+    val base = tempDir("ann_sql").toString
     val lake = s"$base/lake"
     val idx = s"$base/idx"
     val emb = graft.sources.Tables.embeddings(spark, sf)
@@ -462,7 +462,7 @@ class MaintenanceSqlSpec extends AnyFunSuite {
       s"frozen OPTIMIZE must report an unchanged file count: $opt")
 
     // and OR REPLACE is the only way over a non-index dir
-    val dirty = java.nio.file.Files.createTempDirectory("graft_ann_dirty")
+    val dirty = tempDir("ann_dirty")
       .toString
     java.nio.file.Files.write(
       new java.io.File(dirty, "precious.txt").toPath, "data".getBytes)
@@ -478,7 +478,7 @@ class MaintenanceSqlSpec extends AnyFunSuite {
     import graft.operators.Similarity
     import graft.streaming.StreamingAnn
     val sf = graft.SharedSpark.sf
-    val base = java.nio.file.Files.createTempDirectory("graft_ann_follow")
+    val base = tempDir("ann_follow")
       .toString
     val lake = s"$base/lake"
     val idx = s"$base/idx"
@@ -527,7 +527,7 @@ class MaintenanceSqlSpec extends AnyFunSuite {
   test("HYBRID QUERY fuses the two index probes through one statement") {
     import graft.operators.{RetrievalOps, Similarity}
     val sf = graft.SharedSpark.sf
-    val base = java.nio.file.Files.createTempDirectory("graft_hybrid_sql")
+    val base = tempDir("hybrid_sql")
       .toString
     val docsLake = s"$base/docs"
     val vecsLake = s"$base/vecs"

@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.SharedSpark.{spark, sf}
+import graft.SharedSpark.{spark, sf, tempDir}
 import graft.sources.{LakeIO, Tables}
 import graft.syntax._
 
@@ -22,7 +22,7 @@ class MvRewriteSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.conf.set("spark.graft.metadataCount.enabled", "false")
 
   private lazy val root =
-    java.nio.file.Files.createTempDirectory("graft_mvspec").toString
+    tempDir("mvspec").toString
   private lazy val path = {
     val p = root + "/events"
     LakeIO.writeLake(
@@ -80,7 +80,7 @@ class MvRewriteSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("MV state writes partitioned — never a single-task funnel") {
     // dedicated lake: the shared suite MV may already exist (write-once)
-    val root2 = java.nio.file.Files.createTempDirectory("graft_mvpart").toString
+    val root2 = tempDir("mvpart").toString
     val p2 = root2 + "/events"
     LakeIO.writeLake(
       Tables.events(spark, sf).select($"event_id", $"ts", $"event_type", $"value"), p2)

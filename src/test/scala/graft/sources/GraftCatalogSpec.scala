@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ManifestFileIndex
 
-import graft.SharedSpark.spark
+import graft.SharedSpark.{spark, tempDir}
 
 /** The graft V2 TableCatalog: SQL-text addressing, SHOW TABLES, and
   * `VERSION AS OF` time travel across a copy-on-write merge.
@@ -12,7 +12,7 @@ import graft.SharedSpark.spark
 class GraftCatalogSpec extends AnyFunSuite {
   import spark.implicits._
 
-  private val wh = java.nio.file.Files.createTempDirectory("graft_cat_wh").toString
+  private val wh = tempDir("cat_wh").toString
 
   private def attach(): Unit = {
     spark.conf.set("spark.sql.catalog.gcat",
@@ -127,7 +127,7 @@ class GraftCatalogSpec extends AnyFunSuite {
 
   test("ALTER TABLE ADD COLUMN: schema-only snapshot, nulls on old files, time-travelable") {
     attach()
-    val wh2 = java.nio.file.Files.createTempDirectory("graft_alter_wh").toString
+    val wh2 = tempDir("alter_wh").toString
     spark.conf.set("spark.sql.catalog.galt",
       "org.apache.spark.sql.graft.GraftCatalog")
     spark.conf.set("spark.sql.catalog.galt.warehouse", wh2)

@@ -1,13 +1,18 @@
 package graft.sources
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.datasources.FilePartition
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan
 import org.apache.spark.sql.functions._
 
-import graft.SharedSpark.{spark, sf}
+import graft.SharedSpark.{spark, sf, tempDir}
 import graft.syntax._
 
 /** S6/S7: pruned scan ≡ full scan + filter, and pruning actually prunes
-  * (files read under the partition filter < total files).
+  * (files planned under the partition filter < total files), all through
+  * the graft-lake V2 source.
   */
 class LakeIOSpec extends AnyFunSuite {
 
@@ -19,7 +24,7 @@ class LakeIOSpec extends AnyFunSuite {
     // marker-guarded fixture rebuilt on EVERY access — a ~100× bench
     // regression on every ensureLake-backed query, invisible to
     // correctness because rebuilds are deterministic
-    val root = java.nio.file.Files.createTempDirectory("graft_once").toString + "/events"
+    val root = tempDir("once").toString + "/events"
     LakeIO.writeLake(Tables.events(spark, sf).limit(50), root)
     assert(new java.io.File(root, "_SUCCESS").exists(),
       "writeLake must leave the committed-root marker")
@@ -31,7 +36,7 @@ class LakeIOSpec extends AnyFunSuite {
   }
 
   test("pruned scan equals full scan + ts filter") {
-    val pruned = LakeIO.prunedScan(spark, path,
+    val pruned = graft.Graft.lake.scan(spark, path,
       "2024-01-05 00:00:00", "2024-01-06 00:00:00")
       .select($"event_id").collect().map(_.getLong(0)).sorted
     val full = Tables.events(spark, sf)
@@ -42,68 +47,38 @@ class LakeIOSpec extends AnyFunSuite {
     assert(pruned.toSeq === full.toSeq)
   }
 
+  private def scanOf(df: DataFrame): ParquetScan =
+    df.queryExecution.executedPlan.collectFirst {
+      case b: BatchScanExec => b.scan
+    }.collect {
+      case p: ParquetScan => p
+      case g: org.apache.spark.sql.graft.GraftLakeScan => g.initial
+    }.getOrElse(fail("expected a V2 ParquetScan in the plan"))
+
+  private def filesPlanned(df: DataFrame): Int =
+    scanOf(df).toBatch.planInputPartitions().map {
+      case fp: FilePartition => fp.files.length
+      case _ => 0
+    }.sum
+
+  private def ids(df: DataFrame): Seq[Long] =
+    df.select($"event_id").collect().map(_.getLong(0)).sorted.toSeq
+
   test("partition filter prunes: scan reads fewer files than the table has") {
-    def filesRead(df: org.apache.spark.sql.DataFrame): Long = {
-      df.collect() // populate scan metrics
-      df.queryExecution.executedPlan.collect {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-          f.metrics("numFiles").value
-      }.sum
-    }
-    val all = spark.read.parquet(path)
+    val all = spark.read.format("graft-lake").load(path)
     val pruned = all.where($"ts_hour" >= "2024-01-05-00" && $"ts_hour" <= "2024-01-05-23")
-    val total = filesRead(all)
-    val kept = filesRead(pruned)
+    val total = filesPlanned(all)
+    val kept = filesPlanned(pruned)
     assert(kept > 0)
     assert(kept < total, s"expected pruning: $kept < $total")
   }
 
-  test("hidden partition pruning rule: raw-ts predicate prunes directories") {
-    graft.plans.HourPartitionPruning.install(spark)
-    def filesRead(df: org.apache.spark.sql.DataFrame): Long = {
-      df.collect()
-      df.queryExecution.executedPlan.collect {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-          f.metrics("numFiles").value
-      }.sum
-    }
-    val all = spark.read.parquet(path)
-    // NO ts_hour predicate — the rule must derive it from raw ts bounds
-    val hidden = all.where($"ts" >= to_timestamp(lit("2024-01-05 00:00:00"))
-      && $"ts" < to_timestamp(lit("2024-01-06 00:00:00")))
-    val kept = filesRead(hidden)
-    val total = filesRead(all)
-    assert(kept > 0 && kept < total, s"hidden pruning: $kept < $total")
-    // and an hour-equality predicate prunes to ≤ one dir per day
-    val hourEq = all.where(hour($"ts") === 14)
-    val keptHour = filesRead(hourEq)
-    assert(keptHour > 0 && keptHour < total, s"hour-eq pruning: $keptHour < $total")
-    // results unchanged vs the un-pruned plan
-    val expected = Tables.events(spark, sf).where(hour($"ts") === 14).count()
-    assert(hourEq.count() === expected)
-  }
-
   test("graft-lake V2 source: raw-ts predicate becomes a source-level PartitionFilter") {
-    import org.apache.spark.sql.execution.datasources.FilePartition
-    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-    import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan
-    def scanOf(df: org.apache.spark.sql.DataFrame): ParquetScan =
-      df.queryExecution.executedPlan.collectFirst {
-        case b: BatchScanExec => b.scan
-      }.collect {
-        case p: ParquetScan => p
-        case g: org.apache.spark.sql.graft.GraftLakeScan => g.initial
-      }.getOrElse(fail("expected a V2 ParquetScan in the plan"))
-    def filesPlanned(scan: ParquetScan): Int =
-      scan.toBatch.planInputPartitions().map {
-        case fp: FilePartition => fp.files.length
-        case _ => 0
-      }.sum
-
     val all = spark.read.format("graft-lake").load(path)
+    val from = to_timestamp(lit("2024-01-05 00:00:00"))
+    val to = to_timestamp(lit("2024-01-06 00:00:00"))
     // NO ts_hour predicate — the scan builder must derive it from raw ts
-    val hidden = all.where($"ts" >= to_timestamp(lit("2024-01-05 00:00:00"))
-      && $"ts" < to_timestamp(lit("2024-01-06 00:00:00")))
+    val hidden = all.where($"ts" >= from && $"ts" < to)
     val hiddenScan = scanOf(hidden)
     assert(hiddenScan.fileIndex.isInstanceOf[org.apache.spark.sql.graft.ManifestFileIndex],
       "committed lake must plan from the manifest, not filesystem listing: " +
@@ -112,21 +87,33 @@ class LakeIOSpec extends AnyFunSuite {
       "derived ts_hour predicates must land in the scan's partitionFilters")
     assert(hiddenScan.partitionFilters.forall(
       _.references.forall(_.name == "ts_hour")))
-    val total = filesPlanned(scanOf(all))
-    val kept = filesPlanned(hiddenScan)
-    assert(kept > 0 && kept < total, s"V2 hidden pruning: $kept < $total")
-    // exact same rows as the un-pruned truth
-    val expected = Tables.events(spark, sf)
-      .where($"ts" >= to_timestamp(lit("2024-01-05 00:00:00"))
-        && $"ts" < to_timestamp(lit("2024-01-06 00:00:00")))
-      .select($"event_id").collect().map(_.getLong(0)).sorted
-    val got = hidden.select($"event_id").collect().map(_.getLong(0)).sorted
-    assert(got.toSeq === expected.toSeq)
+  }
+
+  test("hidden partition pruning rule: raw-ts predicate prunes directories") {
+    // the ts → ts_hour derivation lives in the graft-lake scan builder; each
+    // shape plans fewer files than the table has and returns exactly the
+    // rows of the un-pruned truth
+    val all = spark.read.format("graft-lake").load(path)
+    val total = filesPlanned(all)
+    val events = Tables.events(spark, sf)
+    val from = to_timestamp(lit("2024-01-05 00:00:00"))
+    val to = to_timestamp(lit("2024-01-06 00:00:00"))
+    val cases = Seq(
+      "ts range" -> ($"ts" >= from && $"ts" < to),
+      "hour(ts) = 14" -> (hour($"ts") === 14),
+      "mirrored operands" -> (from <= $"ts" && to > $"ts"),
+      "ts_hour only" -> ($"ts_hour" >= "2024-01-05-00" && $"ts_hour" <= "2024-01-05-23"))
+    cases.foreach { case (name, cond) =>
+      val q = all.where(cond)
+      val kept = filesPlanned(q)
+      assert(kept > 0 && kept < total, s"$name: V2 pruning $kept < $total")
+      val truth = events.withColumn("ts_hour", date_format($"ts", "yyyy-MM-dd-HH"))
+        .where(cond)
+      assert(ids(q) === ids(truth), s"$name: rows differ from the un-pruned truth")
+    }
   }
 
   test("graft-lake V2 source: runtime (DPP) filtering prunes partitions from a dim join") {
-    import org.apache.spark.sql.execution.datasources.FilePartition
-    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
     val fact = spark.read.format("graft-lake").load(path)
     def files(s: org.apache.spark.sql.connector.read.Scan): Int =
       s.toBatch.planInputPartitions().collect {
@@ -179,47 +166,34 @@ class LakeIOSpec extends AnyFunSuite {
   }
 
   test("graft-lake V2 source: column pruning reaches the parquet read schema") {
-    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-    import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan
     val narrow = spark.read.format("graft-lake").load(path)
       .select($"event_id", $"value")
-    val scan = narrow.queryExecution.executedPlan.collectFirst {
-      case b: BatchScanExec => b.scan
-    }.collect {
-      case p: ParquetScan => p
-      case g: org.apache.spark.sql.graft.GraftLakeScan => g.initial
-    }.getOrElse(fail("no V2 scan"))
-    assert(scan.readDataSchema.fieldNames.toSet === Set("event_id", "value"),
+    assert(scanOf(narrow).readDataSchema.fieldNames.toSet === Set("event_id", "value"),
       "projection must prune the V2 read schema")
   }
 
   test("compaction collapses fragmented partitions without losing rows") {
-    import graft.SharedSpark.spark
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact").toString + "/lake"
-    // fragment: 8 writer tasks into few hours → many small files per dir
-    val df = Tables.events(spark, sf).limit(2000).repartition(8)
-      .withColumn("ts_hour", org.apache.spark.sql.functions
-        .date_format($"ts", "yyyy-MM-dd-HH"))
-    df.write.partitionBy("ts_hour").parquet(dir)
-    def parquetFiles = {
-      def walk(f: java.io.File): Seq[java.io.File] =
-        Option(f.listFiles()).map(_.toSeq.flatMap(c =>
-          if (c.isDirectory) walk(c) else Seq(c))).getOrElse(Nil)
-      walk(new java.io.File(dir)).count(_.getName.endsWith(".parquet"))
-    }
-    val hours = spark.read.parquet(dir).select("ts_hour").distinct().count()
-    val before = parquetFiles
-    assert(before > hours, s"fixture should be fragmented: $before files / $hours dirs")
-    val n0 = spark.read.parquet(dir).count()
-    LakeIO.compact(spark, dir)
-    assert(parquetFiles.toLong === hours, "one file per partition after compaction")
-    assert(spark.read.parquet(dir).count() === n0)
+    val dir = tempDir("compact").toString + "/lake"
+    // fragment: every append adds one file to each hour it touches
+    val rows = Tables.events(spark, sf)
+      .where($"ts" >= to_timestamp(lit("2024-01-05 00:00:00"))
+        && $"ts" < to_timestamp(lit("2024-01-07 00:00:00")))
+    (0 until 3).foreach(i => LakeIO.appendTxn(rows.where($"event_id" % 3 === i), dir))
+    def live = org.apache.spark.sql.graft.ManifestFileIndex.read(dir).get._2
+      .groupBy(_.partValue)
+    def read = spark.read.format("graft-lake").load(dir)
+    assert(live.exists(_._2.size > 1), "fixture should be fragmented")
+    val n0 = read.count()
+    assert(n0 === rows.count())
+    graft.Graft.lake.compact(spark, dir)
+    assert(live.values.forall(_.size == 1), "one file per partition after compaction")
+    assert(read.count() === n0)
   }
 
   test("schema evolution: widened batches merge on read (S6 parity)") {
     import graft.SharedSpark.spark
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_evolve").toString
+    val dir = tempDir("evolve").toString
     Seq((1L, "a")).toDF("id", "v").write.mode("append").parquet(dir)
     Seq((2L, "b", 9.5)).toDF("id", "v", "extra").write.mode("append").parquet(dir)
     val merged = spark.read.option("mergeSchema", "true").parquet(dir)
@@ -232,7 +206,7 @@ class LakeIOSpec extends AnyFunSuite {
   test("write-side schema evolution: evolveAppend commits the union schema to table metadata") {
     import graft.SharedSpark.spark
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_evolve_w").toString + "/lake"
+    val dir = tempDir("evolve_w").toString + "/lake"
     def t(s: String) = java.sql.Timestamp.valueOf(s)
     LakeIO.evolveAppend(
       Seq((1L, t("2024-01-01 10:00:00"), "a")).toDF("id", "ts", "v"), dir)
@@ -242,14 +216,11 @@ class LakeIOSpec extends AnyFunSuite {
     // metadata carries the union; NO mergeSchema option anywhere
     val meta = LakeIO.tableSchema(dir).get
     assert(meta.fieldNames.contains("extra"))
-    val rows = LakeIO.readEvolved(spark, dir).orderBy("id").collect()
+    // the V2 source reads the evolved schema from metadata
+    val rows = spark.read.format("graft-lake").load(dir).orderBy("id").collect()
     assert(rows.map(_.getLong(0)).toSeq === Seq(1L, 2L))
     assert(rows(0).isNullAt(rows(0).fieldIndex("extra")), "old files null-fill new cols")
     assert(rows(1).getDouble(rows(1).fieldIndex("extra")) === 9.5)
-    // the V2 source reads the evolved schema from metadata too
-    val v2 = spark.read.format("graft-lake").load(dir)
-    assert(v2.columns.contains("extra"))
-    assert(v2.orderBy("id").collect()(1).getDouble(v2.columns.indexOf("extra")) === 9.5)
     // incompatible type change is rejected loudly
     intercept[IllegalArgumentException] {
       LakeIO.evolveAppend(
@@ -260,7 +231,7 @@ class LakeIOSpec extends AnyFunSuite {
   test("time travel: versionAsOf reads the frozen snapshot manifest and schema") {
     import graft.SharedSpark.spark
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_tt").toString + "/lake"
+    val dir = tempDir("tt").toString + "/lake"
     def t(s: String) = java.sql.Timestamp.valueOf(s)
     LakeIO.writeLake(
       Seq((1L, t("2024-01-01 10:00:00"), "a")).toDF("id", "ts", "v"), dir)
@@ -282,7 +253,7 @@ class LakeIOSpec extends AnyFunSuite {
   }
 
   test("lake roundtrip preserves row count and schema columns") {
-    val n = spark.read.parquet(path).count()
+    val n = spark.read.format("graft-lake").load(path).count()
     assert(n === Tables.events(spark, sf).count())
   }
 }

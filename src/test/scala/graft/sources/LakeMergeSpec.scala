@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ManifestFileIndex
 
-import graft.SharedSpark.{spark, sf}
+import graft.SharedSpark.{spark, sf, tempDir}
 import graft.syntax._
 
 /** Copy-on-write lake mutations: MERGE/DELETE rewrite only touched
@@ -120,25 +120,31 @@ class LakeMergeSpec extends AnyFunSuite {
     assert(skipped.nonEmpty)
   }
 
-  test("external reconcile-commit (commitAfterAppend) reads parked files from the manifest, not a snapshot replay") {
-    freshLake()
-    LakeIO.mergeInto(spark, root, upd, "event_id")   // parks the touched old files
-    val parked = ManifestFileIndex.readParked(root)
-    assert(parked.exists(_.nonEmpty),
-      "the CoW commit must record its parked generation in the manifest")
-    val liveBefore = ManifestFileIndex.read(root).get._2.map(_.relPath).toSet
-    assert(parked.get.forall(p => !liveBefore.contains(p)))
-    // external writer drops files in (the foreachBatch-style raw append)
-    val extra = base.limit(7)
-      .withColumn("ts_hour", date_format($"ts", "yyyy-MM-dd-HH"))
-    extra.repartition(col("ts_hour"))
-      .write.mode("append").partitionBy("ts_hour").parquet(root)
-    LakeIO.commitAfterAppend(root, extra.schema)
-    val after = ManifestFileIndex.read(root).get._2.map(_.relPath).toSet
-    // new files joined the manifest; parked generations did NOT resurrect
-    assert((after -- liveBefore).nonEmpty)
-    assert(parked.get.forall(p => !after.contains(p)),
-      "reconcile must not sweep parked old generations in as live data")
+  test("Graft.lake.scan after MERGE and DELETE returns only the live rows") {
+    // regression: the range scan read the lake DIRECTORY, so the
+    // copy-on-write generations kept on disk for time travel came back
+    // as rows beside their replacements
+    rm(new java.io.File(root))
+    val rows = base.where($"ts" < to_timestamp(lit("2024-01-04 00:00:00")))
+    LakeIO.writeLake(rows, root)
+    def scanned = graft.Graft.lake.scan(spark, root,
+      "2024-01-01 00:00:00", "2024-01-04 00:00:00")
+      .select($"event_id", $"ts", $"event_type", $"value")
+    def sameRows(got: org.apache.spark.sql.DataFrame,
+        want: org.apache.spark.sql.DataFrame): Unit = {
+      assert(got.count() === want.count())
+      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
+    }
+    val updates = rows.where($"event_id" % 7 === 0).withColumn("value", $"value" * 2)
+    graft.Graft.lake.merge(spark, root, updates, "event_id")
+    val merged = updates.unionByName(
+      rows.join(updates.select($"event_id"), Seq("event_id"), "left_anti"))
+    sameRows(readLake(), merged)
+    sameRows(scanned, readLake())
+    graft.Graft.lake.delete(spark, root, $"event_id" % 5 === 0)
+    val live = merged.where($"event_id" % 5 =!= 0)
+    sameRows(readLake(), live)
+    sameRows(scanned, readLake())
   }
 
   test("removeOrphanFiles deletes only unreferenced old debris, honors the grace period") {
@@ -165,7 +171,7 @@ class LakeMergeSpec extends AnyFunSuite {
   }
 
   test("manifest stats round-trip empty string bounds (split must keep trailing empties)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_stats_rt").toString
+    val dir = tempDir("stats_rt").toString
     val e = ManifestFileIndex.Entry("2024-01-01-00", "ts_hour=2024-01-01-00/f.parquet",
       1L, 2L, strStats = Map("s_empty" -> ("", ""), "s_halfempty" -> ("", "61")))
     ManifestFileIndex.commitEntries(dir, "ts_hour", Seq(e))
@@ -180,10 +186,16 @@ class LakeMergeSpec extends AnyFunSuite {
     LakeIO.writeLake(base.where($"ts" < cut), root)
     LakeIO.evolveAppend(base.where($"ts" >= cut), root)
     val inc = LakeIO.readIncrement(spark, root, 1, 2)
-      .select($"event_id", $"ts", $"event_type", $"value")
     val expected = base.where($"ts" >= cut)
-    assert(inc.except(expected).isEmpty)
-    assert(expected.except(inc).isEmpty)
+    val got = inc.select($"event_id", $"ts", $"event_type", $"value")
+    assert(got.except(expected).isEmpty)
+    assert(expected.except(got).isEmpty)
+    // an empty window (fromV == toV): no rows, the increment's columns
+    def cols(df: org.apache.spark.sql.DataFrame) =
+      df.schema.fields.map(f => f.name -> f.dataType).toSeq
+    val empty = LakeIO.readIncrement(spark, root, 2, 2)
+    assert(empty.count() === 0)
+    assert(cols(empty) === cols(inc))
   }
 
   test("expireSnapshots vacuums files of expired snapshots, current read intact") {

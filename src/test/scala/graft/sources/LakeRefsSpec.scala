@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ManifestFileIndex
 
-import graft.SharedSpark.spark
+import graft.SharedSpark.{spark, tempDir}
 
 /** Named snapshot tags and write-audit-publish (WAP) staging: a tag is an
   * immutable release pointer usable wherever a version number is (reader
@@ -32,7 +32,7 @@ class LakeRefsSpec extends AnyFunSuite {
     d.select($"id").collect().map(_.getLong(0)).toSeq.sorted
 
   test("tag: read by name via reader option and SQL VERSION AS OF; immutable; droppable") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_refs_wh").toString
+    val wh = tempDir("refs_wh").toString
     val root = s"$wh/default/items"
     fresh(root, 1L -> "a", 2L -> "b")
     val v = LakeIO.tagSnapshot(root, "corpus-v1")
@@ -70,7 +70,7 @@ class LakeRefsSpec extends AnyFunSuite {
   }
 
   test("SQL tag lifecycle: ALTER TABLE CREATE TAG / SHOW TAGS / VERSION AS OF / DROP TAG") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_refs_sql_wh").toString
+    val wh = tempDir("refs_sql_wh").toString
     val root = s"$wh/default/items"
     fresh(root, 1L -> "a")
     spark.conf.set("spark.sql.catalog.grefsql",

@@ -15,7 +15,7 @@ import org.apache.spark.sql.graft.ManifestFileIndex
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SharedSpark.{sf, spark}
+import graft.SharedSpark.{sf, spark, tempDir}
 
 /** Lake stage writes and commit bookkeeping without per-file overhead:
   * no OS process per written file ([[LocalFs]]), the same file modes a
@@ -25,7 +25,7 @@ import graft.SharedSpark.{sf, spark}
 class LakeWriteSpec extends AnyFunSuite with BeforeAndAfterAll {
   import spark.implicits._
 
-  private val root = Files.createTempDirectory("graft_lake_write")
+  private val root = tempDir("lake_write")
 
   override def afterAll(): Unit = LakeIO.rmDir(root.toString)
 

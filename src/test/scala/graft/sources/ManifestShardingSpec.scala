@@ -5,7 +5,7 @@ import org.scalatest.BeforeAndAfterAll
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ManifestFileIndex
 
-import graft.SharedSpark.{spark, sf}
+import graft.SharedSpark.{spark, sf, tempDir}
 import graft.syntax._
 
 /** Two-level manifests: the snapshot file becomes a LIST of immutable,
@@ -200,7 +200,7 @@ class ManifestShardingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val root = s"$base/stream"
     fresh(root)
     assert(ManifestFileIndex.readRefs(root).nonEmpty)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_shard_ck").toString
+    val ckpt = tempDir("shard_ck").toString
     val q = spark.readStream.format("graft-lake-stream").load(root)
       .writeStream.format("memory").queryName("shard_stream")
       .option("checkpointLocation", ckpt).start()

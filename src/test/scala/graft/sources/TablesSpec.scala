@@ -14,7 +14,7 @@ import org.apache.spark.sql.types.TimestampType
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SharedSpark.spark
+import graft.SharedSpark.{spark, tempDir}
 
 /** `Tables.load`'s schema memo: a repeat load of a file launches no
   * schema-inference job, a rewritten file is read with its new schema,
@@ -23,7 +23,7 @@ import graft.SharedSpark.spark
 class TablesSpec extends AnyFunSuite with BeforeAndAfterAll {
   import spark.implicits._
 
-  private val root = Files.createTempDirectory("graft_tables_spec")
+  private val root = tempDir("tables_spec")
 
   override def afterAll(): Unit = {
     def rm(f: java.io.File): Unit = {

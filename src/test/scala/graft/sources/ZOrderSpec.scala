@@ -3,7 +3,7 @@ package graft.sources
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.SharedSpark.spark
+import graft.SharedSpark.{spark, tempDir}
 
 class ZOrderSpec extends AnyFunSuite {
   import spark.implicits._
@@ -46,7 +46,7 @@ class ZOrderSpec extends AnyFunSuite {
     val df = spark.range(n).select(
       (xxhash64($"id").bitwiseAND(1023L)).as("x"),
       (xxhash64($"id" + 7).bitwiseAND(1023L)).as("y"))
-    val base = java.nio.file.Files.createTempDirectory("graft_zorder").toString
+    val base = tempDir("zorder").toString
     val zDir = base + "/z"
     val sDir = base + "/s"
     ZOrder.writeZOrdered(df, zDir, "x", "y", numFiles = 16)

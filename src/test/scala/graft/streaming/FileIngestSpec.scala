@@ -3,7 +3,7 @@ package graft.streaming
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
-import graft.SharedSpark.spark
+import graft.SharedSpark.{spark, tempDir}
 import graft.streaming.WeatherPipeline._
 
 /** S2/S3 ingest shape: the reference's HTTP→Kafka edge becomes a
@@ -19,8 +19,8 @@ class FileIngestSpec extends AnyFunSuite {
     StructField("ts", StringType)))
 
   test("file-drop JSON ingest → tolerant parse → windowed upsert") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ingest")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ingest_ckpt")
+    val dir = tempDir("ingest")
+    val ckpt = tempDir("ingest_ckpt")
     def drop(name: String, lines: String*): Unit =
       java.nio.file.Files.write(dir.resolve(name),
         lines.mkString("\n").getBytes("UTF-8"))

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-import graft.SharedSpark.{spark, sf}
+import graft.SharedSpark.{spark, sf, tempDir}
 import graft.operators.RetrievalOps
 import graft.sources.Tables
 
@@ -27,7 +27,7 @@ class StreamingPostingsSpec extends AnyFunSuite {
   }
 
   private def rebuiltOver(docs: org.apache.spark.sql.DataFrame): Seq[String] = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_pidx").toString
+    val dir = tempDir("pidx").toString
     RetrievalOps.writeIndex(dir, docs, "overwrite")
     RetrievalOps.bm25TopKFromIndex(
       spark.read.parquet(dir + "/postings"),

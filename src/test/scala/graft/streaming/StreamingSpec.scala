@@ -3,7 +3,7 @@ package graft.streaming
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
-import graft.SharedSpark.spark
+import graft.SharedSpark.{spark, tempDir}
 import graft.streaming.WeatherPipeline._
 
 /** T1-T6 streaming parity (SURVEY.md §2.5): watermark, tumble windows,
@@ -206,7 +206,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("T5/S6: committed streaming sink refreshes the manifest; V2 reads see every batch") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_lake_m").toString
+    val dir = tempDir("stream_lake_m").toString
     val input = MemoryStream[WeatherRecord]
     val q = WeatherPipeline.lakeSinkCommitted(input.toDF(), s"$dir/data", s"$dir/ckpt")
     try {
@@ -235,7 +235,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("stream-static enrichment: a lake MERGE between micro-batches is visible without restart") {
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft_enrich").toString + "/dim"
+    val dir = tempDir("enrich").toString + "/dim"
     // city dimension in the lake (hour-partitioned like any graft table)
     def dim(rows: (String, String)*) = rows.toSeq.toDF("city", "region")
       .withColumn("ts", to_timestamp(lit("2024-01-01 00:00:01")))
@@ -263,7 +263,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("exactly-once sink: a replayed micro-batch is a no-op, a partial attempt is cleaned") {
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft_eo_sink").toString + "/data"
+    val dir = tempDir("eo_sink").toString + "/data"
     def batch(ids: Seq[Long]) = ids.toDF("event_id")
       .withColumn("ts", to_timestamp(lit("2024-01-01 10:00:01")))
       .withColumn("ts_hour", date_format($"ts", "yyyy-MM-dd-HH"))
@@ -293,7 +293,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming upsert sink: window refinements MERGE by key; replays don't burn versions") {
     import org.apache.spark.sql.functions._
-    val base = java.nio.file.Files.createTempDirectory("graft_upsert_sink").toString
+    val base = tempDir("upsert_sink").toString
     val dir = base + "/table"
     val input = MemoryStream[WeatherRecord]
     val q = WeatherPipeline.lakeUpsertSink(input.toDF(), dir, base + "/ckpt")
@@ -328,7 +328,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming upsert sink with strategy=mor: refinements land as DV + append, no rewrite") {
     import org.apache.spark.sql.graft.ManifestFileIndex
-    val base = java.nio.file.Files.createTempDirectory("graft_upsert_mor").toString
+    val base = tempDir("upsert_mor").toString
     val dir = base + "/table"
     val input = MemoryStream[WeatherRecord]
     val q = WeatherPipeline.lakeUpsertSink(input.toDF(), dir, base + "/ckpt",
@@ -355,7 +355,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streaming CDC: each micro-batch commit is a snapshot; readIncrement yields that batch") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_cdc").toString
+    val dir = tempDir("stream_cdc").toString
     val input = MemoryStream[WeatherRecord]
     val q = WeatherPipeline.lakeSinkCommitted(input.toDF(), s"$dir/data", s"$dir/ckpt")
     try {
@@ -417,7 +417,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("T5/S6: streaming lake sink commits hour-partitioned parquet") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_lake").toString
+    val dir = tempDir("stream_lake").toString
     val input = MemoryStream[WeatherRecord]
     val q = WeatherPipeline.lakeSink(input.toDF(), s"$dir/data", s"$dir/ckpt")
     try {
