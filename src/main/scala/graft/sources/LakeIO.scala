@@ -62,12 +62,16 @@ object LakeIO {
       .partitionBy(partCol).option("compression", "zstd").parquet(stage)
   }
 
-  def writeLake(df: DataFrame, path: String): Unit = {
-    val withHour = hourPartitioned(df)
-    replaceViaStage(path, "ts_hour", withHour, "writeLake")
-    commitMetadata(path, withHour.schema)
-    markCommitted(path)
-  }
+  def writeLake(df: DataFrame, path: String): Unit =
+    replaceViaStage(path, "ts_hour", hourPartitioned(df), "writeLake")
+
+  /** A fresh writer-unique token for stage directories and the name
+    * prefix of the files they move in. Two concurrent writers never share
+    * a stage (one writer's `mode("overwrite")` stage write would wipe the
+    * other's files) nor a live file name.
+    */
+  private def stageToken(): String =
+    java.util.UUID.randomUUID.toString.replace("-", "").take(12)
 
   /** Full replace through a stage directory. Two contracts a naive
     * `mode("overwrite").parquet(path)` breaks:
@@ -80,8 +84,8 @@ object LakeIO {
     *    directory, which silently dropped every CHECK constraint, ref
     *    and snapshot file (probed r11 — constraints vanished after a
     *    writeLake on a constrained table). Here only data is replaced:
-    *    partition dirs are swapped, `_graft*` metadata is untouched, and
-    *    the follow-up commit records the replacement as a NEW snapshot.
+    *    partition dirs are swapped, CHECK constraints are untouched, and
+    *    the table restarts at v1 with exactly the moved files.
     *
     * Still the destructive v1 baseline: replaced data files are gone, so
     * prior snapshots become unreadable — [[overwriteLake]] is the
@@ -89,8 +93,7 @@ object LakeIO {
     */
   private def replaceViaStage(path: String, partCol: String, df: DataFrame,
       what: String): Unit = {
-    val token = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-    val stage = path + s"_stage_w$token"
+    val stage = path + s"_stage_w${stageToken()}"
     writeStage(df, partCol, stage)
     // a violation aborts BEFORE the swap: existing data stays intact
     validateStage(path, stage, what)
@@ -131,13 +134,14 @@ object LakeIO {
         .filter(f => f.isFile && f.getName.startsWith("_graft_bloom_"))
         .foreach { f => f.delete(); () }
     }
-    Option(new java.io.File(stage).listFiles()).getOrElse(Array.empty)
-      .filter(d => d.isDirectory && d.getName.startsWith(partCol + "="))
-      .foreach { d =>
-        java.nio.file.Files.move(d.toPath,
-          new java.io.File(root, d.getName).toPath)
-      }
-    rmDir(stage)
+    // the history was reset above, so the moved files are the whole
+    // table: a commit from base 0 (Spark's part-file names carry the
+    // write's job UUID, so they need no prefix)
+    val entries = moveStaged(path, partCol, stage, "", validate = false)
+    writeSchemaFile(path, df.schema)
+    org.apache.spark.sql.graft.ManifestFileIndex.commitDelta(path, partCol, 0,
+      entries, Set.empty)
+    markCommitted(path)
   }
 
   /** Re-mark a replaced root committed: a direct spark write used to
@@ -146,8 +150,8 @@ object LakeIO {
     * `_SUCCESS` lives in the stage root and never moves, so omitting
     * this made every marker-guarded fixture rebuild on EVERY access
     * (caught as a ~100× bench regression on all ensureLake-backed
-    * queries). Written AFTER the metadata commit, never inside
-    * [[replaceViaStage]]: the swap deletes the old manifest, so a crash
+    * queries). Written AFTER the metadata commit, never before it:
+    * [[replaceViaStage]]'s swap deletes the old manifest, so a crash
     * between swap and commit must leave the root UNMARKED (the guard
     * then rebuilds and self-heals) rather than marked-but-manifestless
     * (every V2 read fails until manual cleanup).
@@ -162,13 +166,8 @@ object LakeIO {
     * low-volume table starts on before [[evolvePartitioning]] moves it to
     * hour(ts) when volume grows (Iceberg partition-spec evolution).
     */
-  def writeLakeDay(df: DataFrame, path: String): Unit = {
-    val withDay = dayPartitioned(df)
-    replaceViaStage(path, "ts_day", withDay, "writeLakeDay")
-    writeSchemaFile(path, withDay.schema)
-    org.apache.spark.sql.graft.ManifestFileIndex.commit(path, "ts_day")
-    markCommitted(path)
-  }
+  def writeLakeDay(df: DataFrame, path: String): Unit =
+    replaceViaStage(path, "ts_day", dayPartitioned(df), "writeLakeDay")
 
   /** Write with data-quality EXPECTATIONS — the ingestion gate a training
     * pipeline puts in front of its lake (Delta Live Tables' expectations,
@@ -213,17 +212,6 @@ object LakeIO {
           totals.getLong(0), totals.getLong(1))
       }).toDF("expectation", "failed", "rows_in", "rows_written")
     } finally { tagged.unpersist(); () }
-  }
-
-  /** Commit-time metadata: union schema + file manifest, so graft-lake V2
-    * reads plan with ZERO filesystem listing and zero footer reads (the
-    * walk below runs once per commit, on the single writer — not per
-    * query, not per reader).
-    */
-  private def commitMetadata(path: String,
-      schema: org.apache.spark.sql.types.StructType): Unit = {
-    writeSchemaFile(path, schema)
-    org.apache.spark.sql.graft.ManifestFileIndex.commit(path, "ts_hour")
   }
 
   /** Write-side schema evolution (S6 parity with the reference's
@@ -276,12 +264,12 @@ object LakeIO {
     // snapshot replay, and a crashed earlier attempt's orphans are never
     // swept in as live data (they stay unreferenced until vacuumed).
     import org.apache.spark.sql.graft.ManifestFileIndex
-    val v = ManifestFileIndex.headVersion(path).getOrElse(0) + 1
-    val stage = path + s"_stage_a$v"
+    val token = stageToken()
+    val stage = path + s"_stage_a$token"
     writeStage(withHour, "ts_hour", stage)
-    val appended = moveStaged(path, "ts_hour", stage, s"a$v-")
+    val appended = moveStaged(path, "ts_hour", stage, s"a$token-")
     // delta commit: appends rebase over concurrent commits and carry any
-    // live deletion vectors forward (commitEntries would drop both)
+    // live deletion vectors forward
     ManifestFileIndex.commitDelta(path, "ts_hour",
       ManifestFileIndex.claimedVersion(path), appended, Set.empty)
     ()
@@ -305,10 +293,7 @@ object LakeIO {
     val withHour = hourPartitioned(df)
     if (tableSchema(path).isEmpty) writeSchemaFile(path, withHour.schema)
     val base = ManifestFileIndex.claimedVersion(path)
-    // UUID token, not head+1: two racing writers would collide on a
-    // version-derived stage directory/file prefix before ever reaching
-    // the commit protocol
-    val token = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
+    val token = stageToken()
     val stage = path + s"_stage_t$token"
     writeStage(withHour, "ts_hour", stage)
     val appended = moveStaged(path, "ts_hour", stage, s"t$token-")
@@ -605,14 +590,15 @@ object LakeIO {
 
   /** Move every staged partition file into the live tree under
     * `prefix`-unique names and return its manifest entries (footer stats
-    * included). Shared by the CoW tail and the append path; the staged
+    * included): the entries every staged lake write commits. The staged
     * directory is removed afterwards.
     *
     * `validate=true` (every row-introducing path) re-reads the staged
     * parquet and enforces table CHECK constraints BEFORE anything moves:
     * on violation the staged directory is deleted and the table is
     * untouched (no live-tree debris, no commit). Carried-row rewrites
-    * pass `validate=false` — see the constraints block above.
+    * pass `validate=false` — see the constraints block above — as do
+    * writers that validated the stage themselves.
     */
   private def moveStaged(path: String, partCol: String, stage: String,
       prefix: String, validate: Boolean = true):
@@ -667,15 +653,11 @@ object LakeIO {
     */
   def optimizeZOrder(s: SparkSession, path: String, colA: String, colB: String,
       filesPerPartition: Int = 4): Unit = {
-    requireNoDvs(path, "optimizeZOrder")
-    import org.apache.spark.sql.graft.ManifestFileIndex
-    val cur = ManifestFileIndex.read(path)
-    require(cur.isDefined, s"optimizeZOrder: $path has no committed manifest")
-    val (partCol, entries) = cur.get
+    val (base, partCol, entries) = baseSnapshot(path, "optimizeZOrder")
     if (entries.isEmpty) return
     val rows = maintenanceScan(s, path, partCol, entries)
     val nParts = entries.map(_.partValue).distinct.size
-    writeCow(s, path, partCol, rows, Seq.empty, validate = false, cluster = df =>
+    writeCow(s, path, partCol, base, rows, entries, validate = false, cluster = df =>
       ZOrder.withZValue(df, colA, colB)
         // contiguous (partition, z) ranges per task → each file is a
         // small bounding box in both z dimensions
@@ -693,15 +675,12 @@ object LakeIO {
     * `expireSnapshots` vacuums them, so time travel keeps working.
     */
   def compactSnapshots(s: SparkSession, path: String): Unit = {
-    requireNoDvs(path, "compactSnapshots")
-    val cur = org.apache.spark.sql.graft.ManifestFileIndex.read(path)
-    require(cur.isDefined, s"compactSnapshots: $path has no committed manifest")
-    val (partCol, entries) = cur.get
+    val (base, partCol, entries) = baseSnapshot(path, "compactSnapshots")
     val fragmented = entries.groupBy(_.partValue).filter(_._2.size > 1).keySet
     if (fragmented.isEmpty) return
-    val (touched, untouched) = entries.partition(e => fragmented.contains(e.partValue))
+    val touched = entries.filter(e => fragmented.contains(e.partValue))
     val rows = maintenanceScan(s, path, partCol, touched)
-    writeCow(s, path, partCol, rows, untouched, validate = false)
+    writeCow(s, path, partCol, base, rows, touched, validate = false)
   }
 
   /** Copy-on-write MERGE (upsert) keyed on `key`: rows of `updates` whose
@@ -729,15 +708,11 @@ object LakeIO {
     */
   def mergeInto(s: SparkSession, path: String, updates: DataFrame,
       keys: Seq[String]): Unit = {
-    requireNoDvs(path, "mergeInto")
-    requireHourEra(path, "mergeInto")
+    val (base, partCol, entries) = baseSnapshot(path, "mergeInto", hourEra = true)
     val withHour = hourPartitioned(updates)
     val affected: Set[String] =
       withHour.select($"ts_hour").distinct().collect().map(_.getString(0)).toSet
-    val cur = org.apache.spark.sql.graft.ManifestFileIndex.read(path)
-    require(cur.isDefined, s"mergeInto: $path has no committed manifest")
-    val (partCol, entries) = cur.get
-    val (touched, untouched) = entries.partition(e => affected.contains(e.partValue))
+    val touched = entries.filter(e => affected.contains(e.partValue))
     val rewritten = {
       if (touched.isEmpty) withHour
       else {
@@ -747,23 +722,22 @@ object LakeIO {
         survivors.select(withHour.columns.map(col).toIndexedSeq: _*).unionByName(withHour)
       }
     }
-    writeCow(s, path, partCol, rewritten, untouched)
+    writeCow(s, path, partCol, base, rewritten, touched)
   }
 
   /** INSERT OVERWRITE: replace the table's entire logical content with
     * `df` as ONE new snapshot — the old generation's files stay on disk,
     * parked and referenced by earlier snapshot manifests, so time travel
     * works across the overwrite (Delta/Iceberg overwrite semantics at
-    * snapshot granularity). Live deletion vectors are dropped with the
-    * full-state commit: no pre-overwrite file stays live, so there is no
-    * row a stale DV could resurrect — the one CoW mutation that is
-    * DV-safe by construction.
+    * snapshot granularity). Live deletion vectors are cleared with the
+    * commit: no pre-overwrite file stays live, so there is no row a
+    * stale DV could resurrect — the one CoW mutation that is DV-safe by
+    * construction.
     */
   def overwriteLake(s: SparkSession, path: String, df: DataFrame): Unit = {
-    requireHourEra(path, "overwriteLake")
-    val cur = org.apache.spark.sql.graft.ManifestFileIndex.read(path)
-    require(cur.isDefined, s"overwriteLake: $path has no committed manifest")
-    writeCow(s, path, cur.get._1, hourPartitioned(df), Seq.empty)
+    val (base, partCol, entries) =
+      baseSnapshot(path, "overwriteLake", hourEra = true, allowDvs = true)
+    writeCow(s, path, partCol, base, hourPartitioned(df), entries, clearDvs = true)
   }
 
   /** Overwrite-by-FILTER (Delta `replaceWhere` / `DataFrameWriterV2
@@ -779,23 +753,22 @@ object LakeIO {
     */
   def overwriteWhere(s: SparkSession, path: String, df: DataFrame,
       cond: Column): Unit = {
-    requireNoDvs(path, "overwriteWhere")
-    requireHourEra(path, "overwriteWhere")
+    val (base, _, _) = baseSnapshot(path, "overwriteWhere", hourEra = true)
     val withHour = hourPartitioned(df)
-    val (partCol, cands, skipped) = deleteCandidates(s, path, cond)
+    val (partCol, cands, skipped) = deleteCandidates(s, path, cond, Some(base))
     val entries = cands ++ skipped
     val affected: Set[String] =
       if (cands.isEmpty) Set.empty
       else cowScan(s, path, cands.map(_.relPath)).where(cond)
         .select($"ts_hour").distinct().collect().map(_.getString(0)).toSet
-    val (touched, untouched) = entries.partition(e => affected.contains(e.partValue))
+    val touched = entries.filter(e => affected.contains(e.partValue))
     val rewritten =
       if (touched.isEmpty) withHour
       else cowScan(s, path, touched.map(_.relPath))
         .where(coalesce(!cond, lit(true)))   // SQL DELETE semantics: NULL keeps
         .select(withHour.columns.map(col).toIndexedSeq: _*)
         .unionByName(withHour)
-    writeCow(s, path, partCol, rewritten, untouched)
+    writeCow(s, path, partCol, base, rewritten, touched)
   }
 
   /** DYNAMIC partition overwrite (Hive/Spark `partitionOverwriteMode=
@@ -805,23 +778,20 @@ object LakeIO {
     * is ONE snapshot commit (old generation parked for travel). The
     * partition-granular backfill/restatement verb: rerun one day's
     * pipeline output into a year-long table without rewriting the year.
-    * Refuses over live DVs like every partial CoW mutation (an untouched
-    * file's DV would be dropped by the full-state commit and resurrect
-    * its deleted rows).
+    * Refuses over live DVs like every partial CoW mutation (a rewritten
+    * partition would drop the DV'd positions' deletes and resurrect the
+    * rows).
     */
   def overwritePartitionsDynamic(s: SparkSession, path: String,
       df: DataFrame): Unit = {
-    requireNoDvs(path, "overwritePartitionsDynamic")
-    requireHourEra(path, "overwritePartitionsDynamic")
-    val cur = org.apache.spark.sql.graft.ManifestFileIndex.read(path)
-    require(cur.isDefined, s"overwritePartitionsDynamic: $path has no committed manifest")
-    val (partCol, entries) = cur.get
+    val (base, partCol, entries) =
+      baseSnapshot(path, "overwritePartitionsDynamic", hourEra = true)
     val withHour = hourPartitioned(df)
     // partition VALUES only — metadata-scale, the DPP/deleteWhere precedent
     val affected: Set[String] =
       withHour.select($"ts_hour").distinct().collect().map(_.getString(0)).toSet
-    val untouched = entries.filterNot(e => affected.contains(e.partValue))
-    writeCow(s, path, partCol, withHour, untouched)
+    writeCow(s, path, partCol, base, withHour,
+      entries.filter(e => affected.contains(e.partValue)))
   }
 
   /** Idempotent micro-batch MERGE for `foreachBatch` (streaming upsert
@@ -875,7 +845,7 @@ object LakeIO {
        Seq[org.apache.spark.sql.graft.ManifestFileIndex.Entry]) = {
     import org.apache.spark.sql.graft.ManifestFileIndex
     import org.apache.spark.sql.catalyst.expressions.{And, Expression}
-    // MoR writers pass the CLAIMED version: the mirror manifest lags one
+    // Writers pass the CLAIMED version: the mirror manifest lags one
     // commit during a concurrent writer's claim->publish window, so
     // reading it could include a file removed AT the claimed base —
     // commitDelta's removedSince(base..head) check would never see the
@@ -946,18 +916,17 @@ object LakeIO {
     * prune on the partition value with zero data I/O.
     */
   def deleteWhere(s: SparkSession, path: String, cond: Column): Unit = {
-    requireNoDvs(path, "deleteWhere")
-    requireHourEra(path, "deleteWhere")
-    val (partCol, cands, skipped) = deleteCandidates(s, path, cond)
+    val (base, _, _) = baseSnapshot(path, "deleteWhere", hourEra = true)
+    val (partCol, cands, skipped) = deleteCandidates(s, path, cond, Some(base))
     if (cands.isEmpty) return
     val entries = cands ++ skipped
     val affected: Set[String] = cowScan(s, path, cands.map(_.relPath))
       .where(cond).select($"ts_hour").distinct().collect().map(_.getString(0)).toSet
-    val (touched, untouched) = entries.partition(e => affected.contains(e.partValue))
+    val touched = entries.filter(e => affected.contains(e.partValue))
     if (touched.isEmpty) return
     val survivors = cowScan(s, path, touched.map(_.relPath))
       .where(coalesce(!cond, lit(true)))
-    writeCow(s, path, partCol, survivors, untouched, validate = false)
+    writeCow(s, path, partCol, base, survivors, touched, validate = false)
   }
 
   // -------------------------------------------------------------------
@@ -998,8 +967,7 @@ object LakeIO {
       if (prior.isEmpty) fresh
       else fresh.join(s.read.parquet(prior.map(d => path + "/" + d): _*),
         Seq("_dv_file", "_dv_pos"), "left_anti")
-    val token = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-    val dvRel = s"_graft_dv/dv-$token"
+    val dvRel = s"_graft_dv/dv-${stageToken()}"
     positions.write.options(LocalFs.WriteOptions).mode("errorifexists")
       .parquet(s"$path/$dvRel")
     val n = s.read.parquet(s"$path/$dvRel").count()
@@ -1039,24 +1007,9 @@ object LakeIO {
     // fine — DV positions are file-based)
     requireHourAppends(path, "mergeIntoMoR")
     if (updates.isEmpty) return 0L
-    val base = ManifestFileIndex.claimedVersion(path)
-    // read entries at the CLAIMED snapshot, never the mirror — the mirror
-    // lags one commit inside a concurrent writer's claim->publish window
-    // (same discipline as deleteCandidates; CLAUDE.md invariant). An
-    // unreadable claimed snapshot fails loudly: the mirror fallback would
-    // reopen the race this read exists to close.
-    val cur =
-      if (base > 0) {
-        val snap = ManifestFileIndex.read(path, Some(base))
-        require(snap.isDefined,
-          s"mergeIntoMoR: claimed snapshot v$base under $path is " +
-            "unreadable — refusing to plan from the (possibly lagging) " +
-            "mirror manifest")
-        snap
-      } else ManifestFileIndex.read(path)
-    require(cur.isDefined, s"mergeIntoMoR: $path has no committed manifest")
-    val (partCol, entries) = cur.get
-    val prior = ManifestFileIndex.readDvs(path, Some(base).filter(_ > 0))
+    val (base, partCol, entries) =
+      baseSnapshot(path, "mergeIntoMoR", allowDvs = true)
+    val prior = ManifestFileIndex.readDvs(path, Some(base))
 
     // Stats-prune candidate files by the batch's key RANGE: one tiny agg
     // (2 values per key column) against each file's recorded min/max.
@@ -1119,8 +1072,7 @@ object LakeIO {
           if (prior.isEmpty) hit
           else hit.join(s.read.parquet(prior.map(d => path + "/" + d): _*),
             Seq("_dv_file", "_dv_pos"), "left_anti")
-        val token = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-        val dvRel = s"_graft_dv/dv-$token"
+        val dvRel = s"_graft_dv/dv-${stageToken()}"
         fresh.write.options(LocalFs.WriteOptions).mode("errorifexists")
           .parquet(s"$path/$dvRel")
         val n = s.read.parquet(s"$path/$dvRel").count()
@@ -1130,7 +1082,7 @@ object LakeIO {
     // stage the batch as new data files (same layout discipline as every
     // append: one writer task per touched hour)
     val withHour = hourPartitioned(updates)
-    val token = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
+    val token = stageToken()
     val stage = path + s"_stage_m$token"
     writeStage(withHour, "ts_hour", stage)
     val appended = moveStaged(path, partCol, stage, s"m$token-")
@@ -1179,7 +1131,7 @@ object LakeIO {
         Seq("_dv_file", "_dv_pos"), "left_anti")
     matched.persist()
     try {
-      val token = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
+      val token = stageToken()
       val dvRel = s"_graft_dv/dv-$token"
       matched.select($"_dv_file", $"_dv_pos")
         .write.options(LocalFs.WriteOptions).mode("errorifexists")
@@ -1284,16 +1236,16 @@ object LakeIO {
 
   /** Fold every live deletion vector into a real rewrite: partitions
     * holding DV'd files are rewritten without the deleted positions, the
-    * commit CLEARS the DV list (full-state commit), and the sidecars are
-    * removed. Run from maintenance (like OPTIMIZE) when the read-side DV
-    * tax outweighs a rewrite of the touched partitions. Returns the
-    * number of folded positions.
+    * commit CLEARS the DV list, and the sidecars are removed. Run from
+    * maintenance (like OPTIMIZE) when the read-side DV tax outweighs a
+    * rewrite of the touched partitions. Returns the number of folded
+    * positions.
     */
   def compactDeletes(s: SparkSession, path: String): Long = {
     import org.apache.spark.sql.graft.ManifestFileIndex
-    val dvs = ManifestFileIndex.readDvs(path)
+    val (base, partCol, entries) = baseSnapshot(path, "compactDeletes", allowDvs = true)
+    val dvs = ManifestFileIndex.readDvs(path, Some(base))
     if (dvs.isEmpty) return 0L
-    val (partCol, entries) = ManifestFileIndex.read(path).get
     val dv = s.read.parquet(dvs.map(d => path + "/" + d): _*)
     val folded = dv.count()
     // touched FILES from the DV sidecars: maintenance-path metadata,
@@ -1302,32 +1254,51 @@ object LakeIO {
       .collect().map(_.getString(0)).toSet
     val touchedParts = entries.filter(e => touchedFiles(e.relPath))
       .map(_.partValue).toSet
-    val (touched, untouched) = entries.partition(e => touchedParts(e.partValue))
+    val touched = entries.filter(e => touchedParts(e.partValue))
     // touchedParts membership is per-era exact (day and hour value
     // formats never collide), so mixed-era folding is safe; a day-
     // partitioned table needs its derived column back for the rewrite
     // (explicit multi-file scans never restore directory columns)
-    val base = positionedScan(s, path, touched.map(_.relPath), None)
+    val kept = positionedScan(s, path, touched.map(_.relPath), None)
       .join(broadcast(dv), Seq("_dv_file", "_dv_pos"), "left_anti")
       .drop("_dv_file", "_dv_pos")
     val survivors =
-      if (partCol == "ts_day") dayPartitioned(base.drop("ts_hour")) else base
-    writeCow(s, path, partCol, survivors, untouched, validate = false)
+      if (partCol == "ts_day") dayPartitioned(kept.drop("ts_hour")) else kept
+    writeCow(s, path, partCol, base, survivors, touched, validate = false,
+      clearDvs = true)
     dvs.foreach(d => rmDir(s"$path/$d"))
     folded
   }
 
-  /** Copy-on-write mutations define the complete new state of the files
-    * they rewrite — running one while merge-on-read deletion vectors are
-    * live would resurrect the MoR-deleted rows (the CoW read side plans
-    * from files alone). Refuse loudly; [[compactDeletes]] first.
+  /** The snapshot a mutation plans from and commits against: the CLAIMED
+    * head, never the mirror manifest (which lags one commit inside a
+    * concurrent writer's claim->publish window), as (version, partCol,
+    * entries). The version is the op's `commitDelta` base; an unreadable
+    * claimed snapshot fails loudly rather than fall back to the mirror.
+    * Copy-on-write mutations define the complete new state of the files
+    * they rewrite, so unless `allowDvs` the base must carry no live
+    * deletion vectors — the CoW read side plans from files alone and
+    * would resurrect MoR-deleted rows; [[compactDeletes]] first. A DV
+    * committed after this read makes the CoW commit conflict
+    * (`requireNoNewDvs`). `hourEra` adds [[requireHourEra]]'s check.
     */
-  private def requireNoDvs(path: String, op: String): Unit = {
-    val dvs = org.apache.spark.sql.graft.ManifestFileIndex.readDvs(path)
-    require(dvs.isEmpty,
-      s"$op: table has ${dvs.size} live deletion vector(s) — run " +
-        "LakeIO.compactDeletes first (CoW over live DVs would resurrect " +
-        "MoR-deleted rows)")
+  private def baseSnapshot(path: String, op: String, hourEra: Boolean = false,
+      allowDvs: Boolean = false)
+    : (Int, String, Seq[org.apache.spark.sql.graft.ManifestFileIndex.Entry]) = {
+    import org.apache.spark.sql.graft.ManifestFileIndex
+    val base = ManifestFileIndex.claimedVersion(path)
+    require(base > 0, s"$op: $path has no committed manifest")
+    val (partCol, entries) = ManifestFileIndex.read(path, Some(base)).getOrElse(
+      sys.error(s"$op: claimed snapshot v$base under $path is unreadable"))
+    if (!allowDvs) {
+      val dvs = ManifestFileIndex.readDvs(path, Some(base))
+      require(dvs.isEmpty,
+        s"$op: table has ${dvs.size} live deletion vector(s) — run " +
+          "LakeIO.compactDeletes first (CoW over live DVs would resurrect " +
+          "MoR-deleted rows)")
+    }
+    if (hourEra) requireHourEra(path, op, partCol, entries)
+    (base, partCol, entries)
   }
 
   /** Copy-on-write UPDATE: rows matching `cond` get `assignments` applied
@@ -1338,14 +1309,13 @@ object LakeIO {
     */
   def updateWhere(s: SparkSession, path: String, cond: Column,
       assignments: Seq[(String, Column)]): Unit = {
-    requireNoDvs(path, "updateWhere")
-    requireHourEra(path, "updateWhere")
-    val (partCol, cands, skipped) = deleteCandidates(s, path, cond)
+    val (base, _, _) = baseSnapshot(path, "updateWhere", hourEra = true)
+    val (partCol, cands, skipped) = deleteCandidates(s, path, cond, Some(base))
     if (cands.isEmpty) return
     val entries = cands ++ skipped
     val affected: Set[String] = cowScan(s, path, cands.map(_.relPath))
       .where(cond).select($"ts_hour").distinct().collect().map(_.getString(0)).toSet
-    val (touched, untouched) = entries.partition(e => affected.contains(e.partValue))
+    val touched = entries.filter(e => affected.contains(e.partValue))
     if (touched.isEmpty) return
     val rows = cowScan(s, path, touched.map(_.relPath))
     // old-row snapshot semantics: flag + all new values computed BEFORE
@@ -1358,28 +1328,35 @@ object LakeIO {
       case (df, ((name, _), i)) =>
         df.withColumn(name, when($"__upd", col(s"__new_$i")).otherwise(col(name)))
     }.drop("__upd" +: assignments.indices.map(i => s"__new_$i"): _*)
-    writeCow(s, path, partCol, updated, untouched)
+    writeCow(s, path, partCol, base, updated, touched)
   }
 
-  /** Shared copy-on-write tail: stage the rewritten partitions, move the
-    * staged files into the live directories under a version-unique name,
-    * and commit untouched + new entries as the next snapshot. `cluster`
+  /** Shared copy-on-write tail: stage the rewritten rows, move the staged
+    * files into the live directories under writer-unique names, and
+    * commit them as a delta against `base` ([[baseSnapshot]]) that
+    * removes the `replaced` base-live files. A concurrent append survives
+    * (the rewrite is serialized before it); a concurrent rewrite of a
+    * replaced file, or any DV committed since `base`, raises
+    * `CommitConflictException` instead of being reverted. `cluster`
     * shapes the write (default: one file per partition); an OPTIMIZE
     * caller substitutes its own clustering (e.g. z-order ranges).
     * `validate=false` marks carried-row-only rewrites (compact, z-order,
     * delete survivors, DV folds) that skip CHECK-constraint re-validation.
+    * `clearDvs` drops the base's DVs with the commit (overwrite, DV fold).
     */
   private def writeCow(s: SparkSession, path: String, partCol: String,
-      rewritten: DataFrame,
-      untouched: Seq[org.apache.spark.sql.graft.ManifestFileIndex.Entry],
+      base: Int, rewritten: DataFrame,
+      replaced: Seq[org.apache.spark.sql.graft.ManifestFileIndex.Entry],
       cluster: DataFrame => DataFrame = null,
-      validate: Boolean = true): Unit = {
-    import org.apache.spark.sql.graft.ManifestFileIndex
-    val v = ManifestFileIndex.headVersion(path).getOrElse(0) + 1
-    val stage = path + s"_stage_v$v"
+      validate: Boolean = true, clearDvs: Boolean = false): Unit = {
+    val token = stageToken()
+    val stage = path + s"_stage_v$token"
     writeStage(rewritten, partCol, stage, cluster)
-    val newEntries = moveStaged(path, partCol, stage, s"m$v-", validate)
-    ManifestFileIndex.commitEntries(path, partCol, untouched ++ newEntries)
+    val newEntries = moveStaged(path, partCol, stage, s"m$token-", validate)
+    org.apache.spark.sql.graft.ManifestFileIndex.commitDelta(path, partCol, base,
+      newEntries, replaced.map(_.relPath).toSet,
+      requireNoNewDvs = true, clearDvs = clearDvs)
+    ()
   }
 
   /** EXACTLY-ONCE streaming append: idempotent under micro-batch retry.
@@ -1430,34 +1407,10 @@ object LakeIO {
     // stagedRows is None for an EMPTY micro-batch — update-mode triggers
     // emit them routinely; validation must not kill the stream on a no-op
     validateStage(path, stage, "appendExactlyOnce")
-    val stageDir = new java.io.File(stage)
-    val movedB = Option(stageDir.listFiles()).getOrElse(Array.empty)
-      .filter(d => d.isDirectory && d.getName.startsWith("ts_hour="))
-      .sortBy(_.getName)
-      .flatMap { d =>
-        val pv = d.getName.substring("ts_hour=".length)
-        val destDir = new java.io.File(path, d.getName)
-        destDir.mkdirs()
-        Option(d.listFiles()).getOrElse(Array.empty)
-          .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-          .sortBy(_.getName)
-          .map { f =>
-            val dest = new java.io.File(destDir, prefix + f.getName)
-            java.nio.file.Files.move(f.toPath, dest.toPath)
-            (pv, d.getName, dest)
-          }
-      }.toSeq
-    val newEntries = movedB.zip(ManifestFileIndex.footerStatsAll(movedB.map(_._3)))
-      .map { case ((pv, dn, dest), (ls, ss, ds, rc)) =>
-        ManifestFileIndex.Entry(
-          pv, dn + "/" + dest.getName, dest.length(), dest.lastModified(),
-          ls, ss, ds, rc)
-      }
-    rmDir(stage)
-    // Delta commit, not full-state: a batch is a pure ADD, so if another
-    // writer (a second stream, a compactor) committed between our base
-    // read and here, the commit rebases onto their snapshot instead of
-    // silently reverting it — exactly-once AND multi-writer-safe.
+    val newEntries = moveStaged(path, "ts_hour", stage, prefix, validate = false)
+    // a batch is a pure ADD, so if another writer (a second stream, a
+    // compactor) committed between our base read and here, the commit
+    // rebases onto their snapshot — exactly-once AND multi-writer-safe.
     ManifestFileIndex.commitDelta(path, "ts_hour", baseV,
       newEntries, Set.empty)
     ()
@@ -1694,7 +1647,9 @@ object LakeIO {
     // which is what lets SQL INSERT/CTAS arity match the declared
     // columns ([[evolveAppend]] never re-introduces it)
     writeSchemaFile(path, schema)
-    org.apache.spark.sql.graft.ManifestFileIndex.commitEntries(path, "ts_hour", Seq.empty)
+    org.apache.spark.sql.graft.ManifestFileIndex.commitDelta(path, "ts_hour", 0,
+      Seq.empty, Set.empty)
+    ()
   }
 
   def tableSchema(path: String): Option[org.apache.spark.sql.types.StructType] = {
@@ -2015,17 +1970,15 @@ object LakeIO {
     * (MoR deletes are file-position-based and stay era-safe;
     * `evolvePartitioning` + `rewriteEra` converge, then CoW resumes).
     */
-  private def requireHourEra(path: String, op: String): Unit = {
-    org.apache.spark.sql.graft.ManifestFileIndex.read(path).foreach {
-      case (pc, es) =>
-        require(pc == "ts_hour",
-          s"$op: table $path is $pc-partitioned; this mutation accounts " +
-            "touched partitions in hour values — evolvePartitioning(path, " +
-            "\"ts_hour\") (+ rewriteEra) first")
-        require(es.forall(_.relPath.startsWith(pc + "=")),
-          s"$op: table $path is mid partition-evolution (mixed-era files); " +
-            "use the MoR form or run rewriteEra(path) first")
-    }
+  private def requireHourEra(path: String, op: String, pc: String,
+      es: Seq[org.apache.spark.sql.graft.ManifestFileIndex.Entry]): Unit = {
+    require(pc == "ts_hour",
+      s"$op: table $path is $pc-partitioned; this mutation accounts " +
+        "touched partitions in hour values — evolvePartitioning(path, " +
+        "\"ts_hour\") (+ rewriteEra) first")
+    require(es.forall(_.relPath.startsWith(pc + "=")),
+      s"$op: table $path is mid partition-evolution (mixed-era files); " +
+        "use the MoR form or run rewriteEra(path) first")
   }
 
   /** Appending writers stage `ts_hour=` directories; on a table whose
@@ -2148,19 +2101,17 @@ object LakeIO {
     */
   def rewriteEra(s: SparkSession, path: String): Int = {
     import org.apache.spark.sql.graft.ManifestFileIndex
-    requireNoDvs(path, "rewriteEra")
-    val (partCol, entries) = ManifestFileIndex.read(path).get
+    val (base, partCol, entries) = baseSnapshot(path, "rewriteEra")
     require(partCol == "ts_hour",
       s"rewriteEra: convergence target must be ts_hour (table is $partCol)")
     val old = entries.filterNot(_.relPath.startsWith(partCol + "="))
-    if (old.isEmpty) return ManifestFileIndex.claimedVersion(path)
-    val base = ManifestFileIndex.claimedVersion(path)
+    if (old.isEmpty) return base
     val dataSchema = tableSchema(path).map(st =>
       org.apache.spark.sql.types.StructType(st.fields.filterNot(f =>
         f.name == "ts_hour" || f.name == "ts_day")))
     val df = mappedScan(s, path, old.map(_.relPath), dataSchema,
       withPositions = false)
-    val token = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
+    val token = stageToken()
     val stage = path + s"_stage_e$token"
     writeStage(df, "ts_hour", stage)
     val appended = moveStaged(path, partCol, stage, s"e$token-",
@@ -2189,7 +2140,7 @@ object LakeIO {
       }
     }
     ManifestFileIndex.commitDelta(path, partCol, base, appended,
-      old.map(_.relPath).toSet)
+      old.map(_.relPath).toSet, requireNoNewDvs = true)
   }
 
   /** History-aware whole-row scan for the CoW mutation paths: renamed

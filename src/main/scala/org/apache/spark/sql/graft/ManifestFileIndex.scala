@@ -740,102 +740,6 @@ object ManifestFileIndex {
     }
   }
 
-  /** Walk the lake ONCE (at write commit — the only time listing is
-    * justified) and write the manifest atomically (tmp + rename).
-    * Append-style commits only: assumes every .parquet on disk is live.
-    */
-  def commit(rootDir: String, partCol: String): Unit = {
-    val root = new java.io.File(rootDir)
-    if (!root.exists()) return
-    val found = Option(root.listFiles()).getOrElse(Array.empty)
-      .filter(d => d.isDirectory && d.getName.startsWith(partCol + "="))
-      .sortBy(_.getName)
-      .flatMap { d =>
-        val pv = d.getName.substring(partCol.length + 1)
-        Option(d.listFiles()).getOrElse(Array.empty)
-          .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-          .sortBy(_.getName)
-          .map(f => (pv, d.getName, f))
-      }.toSeq
-    val entries = found.zip(footerStatsAll(found.map(_._3))).map {
-      case ((pv, dn, f), (ls, ss, ds, rc)) =>
-        Entry(pv, dn + "/" + f.getName, f.length(), f.lastModified(),
-          ls, ss, ds, rc)
-    }
-    commitEntries(rootDir, partCol, entries)
-  }
-
-  /** The PARKED file set of the current manifest: files on disk that are
-    * not live at head but are still referenced by earlier snapshots
-    * (copy-on-write old generations kept for time travel). Tracked as
-    * `#parked` lines in the manifest itself, maintained by
-    * [[commitEntries]], which carries the set forward from this one read.
-    * Returns None when the manifest predates parked tracking (no
-    * `#parkedv` marker).
-    */
-  def readParked(rootDir: String): Option[Set[String]] = {
-    val f = new java.io.File(rootDir, ManifestName)
-    if (!f.exists()) None
-    else {
-      val lines = java.nio.file.Files.readAllLines(f.toPath)
-      import scala.jdk.CollectionConverters._
-      val ls = lines.asScala
-      if (!ls.exists(_.startsWith("#parkedv\t"))) None
-      else Some(ls.filter(_.startsWith("#parked\t"))
-        .map(_.substring("#parked\t".length)).toSet)
-    }
-  }
-
-  /** Commit an EXPLICIT live-file set — the copy-on-write path
-    * (merge/delete): rewritten partitions contribute only their new
-    * files while the old ones stay on disk for earlier snapshots, so a
-    * directory walk can no longer define table state; the entry list is
-    * the table state (Iceberg's manifest-defines-liveness semantics).
-    */
-  def commitEntries(rootDir: String, partCol: String, entries: Seq[Entry],
-      dvs: Seq[String] = Nil): Unit = {
-    // parked bookkeeping: whatever was live before this commit but is not
-    // live after it just became a parked old generation (kept on disk for
-    // time travel). Carry the previous parked set forward, dropping paths
-    // a vacuum has since deleted so the list can't grow without bound.
-    // ONE mirror read: entries and shard refs must come from the same
-    // parse, or a publish landing between two reads pairs entries@v with
-    // refs@v+1 and the shard-reuse check (endpoints + counts) can carry
-    // a stale-content shard. Shard files are immutable/content-named, so
-    // resolving these refs is atomic with the refs themselves.
-    val prev = readList(rootDir, None)
-    val prevRefs = prev.map(_._3).getOrElse(Seq.empty)
-    val newLive = entries.map(_.relPath).toSet
-    val prevEntries = prev.map { case (_, inline, refs) =>
-      inline ++ refs.flatMap(readShardEntries(rootDir, _))
-    }.getOrElse(Seq.empty)
-    val prevLive = prevEntries.map(_.relPath).toSet
-    val parked = (readParked(rootDir).getOrElse(Set.empty) ++ (prevLive -- newLive))
-      .filter(p => new java.io.File(rootDir, p).exists())
-    // full-state commit: the changed-dir set is the per-dir DIFF vs the
-    // mirror state — only shards containing a differing dir re-render
-    val prevByDir = prevEntries.groupBy(dirOf).view
-      .mapValues(_.sortBy(_.relPath)).toMap
-    val newByDir = entries.groupBy(dirOf).view
-      .mapValues(_.sortBy(_.relPath)).toMap
-    val changedDirs = (prevByDir.keySet ++ newByDir.keySet)
-      .filter(d => prevByDir.get(d) != newByDir.get(d))
-    // full-state commits DROP deletion vectors by default (an overwrite
-    // or a DV-folding rewrite defines the complete new state); restore
-    // passes the restored snapshot's own DV set
-    val content = renderManifestSharded(rootDir, partCol, entries, parked,
-      dvs, prevRefs, changedDirs)
-    // The VERSION claim goes through the same CAS as [[commitDelta]], so
-    // even two "single-writer" commits racing can never share a snapshot
-    // number or tear each other's snapshot files. The table STATE is
-    // still whatever this caller computed (full-state API: last writer
-    // wins semantically) — writers needing lost-update safety commit a
-    // delta instead.
-    var v = claimedVersion(rootDir) + 1
-    while (!tryClaim(rootDir, v, content)) v += 1
-    publishClaimed(rootDir, v, content)
-  }
-
   /** Roll the table back (or forward) to snapshot `v`'s state as a NEW
     * commit — Iceberg's `rollback_to_snapshot` / Delta `RESTORE`.
     * History stays append-only: the restored state gets a fresh version
@@ -846,7 +750,12 @@ object ManifestFileIndex {
     * under a later evolved schema would misread v-era files). Fails
     * loudly when any of v's files or DV sidecars has since been vacuumed
     * — a restore that silently drops rows is worse than no restore.
-    * Full-state/last-writer-wins like every [[commitEntries]] commit.
+    *
+    * Committed as a [[commitDelta]] against the claimed head: v's files
+    * are added (those still live are kept as they are), the head's files
+    * outside v are removed, and the head's DVs are replaced by v's. A
+    * concurrent append survives (serialized after the restore); a
+    * concurrent rewrite of a file the restore removes conflicts.
     */
   def restoreTo(rootDir: String, v: Int): Unit = {
     val (partCol, entries) = read(rootDir, Some(v)).getOrElse(
@@ -864,7 +773,12 @@ object ManifestFileIndex {
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
       tmp.renameTo(new java.io.File(rootDir, "_graft_schema.json")); ()
     }
-    commitEntries(rootDir, partCol, entries, dvs)
+    val base = claimedVersion(rootDir)
+    val headLive = read(rootDir, Some(base)).map(_._2.map(_.relPath).toSet)
+      .getOrElse(Set.empty)
+    commitDelta(rootDir, partCol, base, entries,
+      headLive -- entries.map(_.relPath), addDvs = dvs, clearDvs = true)
+    ()
   }
 
   /** CLONE the table at `srcRoot` — at snapshot `travel`, default head —
@@ -885,7 +799,8 @@ object ManifestFileIndex {
     * with a byte-copy fallback across filesystems — the seam an
     * object-store deployment would replace with a server-side copy or
     * manifest-level reference. History does NOT follow (the clone starts
-    * at its own v1; branches/tags/staged WAP stay with the source).
+    * at its own v1, a [[commitDelta]] from base 0 into the empty target;
+    * branches/tags/staged WAP stay with the source).
     * Returns (sourceVersion, files, bytes).
     */
   def cloneTo(srcRoot: String, dstRoot: String,
@@ -943,13 +858,10 @@ object ManifestFileIndex {
       java.nio.file.Files.copy(cons.toPath,
         new java.io.File(s"$dstRoot/$SnapshotDir", ConstraintsName).toPath); ()
     }
-    commitEntries(dstRoot, partCol, entries, dvs)
+    commitDelta(dstRoot, partCol, 0, entries, Set.empty, addDvs = dvs)
     (v, rels.size.toLong, bytes)
   }
 
-  /** Render the manifest TSV for a live-entry set + parked set (+ live
-    * deletion-vector paths, `#dv` lines — see [[readDvs]]).
-    */
   /** Render one entry line (shared by inline manifests and shard files). */
   private def renderEntryLine(sb: StringBuilder, e: Entry): Unit = {
     // a ':' inside a column name would corrupt the ':'-separated stat
@@ -983,7 +895,6 @@ object ManifestFileIndex {
   private def renderHeader(partCol: String, parked: Set[String],
       dvs: Seq[String]): StringBuilder = {
     val sb = new StringBuilder(s"#partcol\t$partCol\n")
-    sb.append("#parkedv\t1\n")
     // commit wall-clock INSIDE the snapshot content: file mtimes do not
     // survive a directory copy/restore (rsync without -t, object-store
     // migration), which would silently shift every historical
@@ -1020,7 +931,7 @@ object ManifestFileIndex {
     *    existing shard file is REUSED with zero writes. Only shards
     *    whose dirs actually changed are re-rendered; a shard growing
     *    past 2×target splits at dir boundaries.
-    *  - `changedDirs` (from the caller's delta/diff) lets unchanged
+    *  - `changedDirs` (the dirs of the commit's delta) lets unchanged
     *    shards skip even the re-render: their refs carry over verbatim.
     *
     * Shards hold ONLY entry lines; #parked/#dv/#shard stay in the list,
@@ -1109,14 +1020,6 @@ object ManifestFileIndex {
     (claimed :+ headVersion(rootDir).getOrElse(0)).max
   }
 
-  /** CAS primitive of the commit protocol: atomically claim snapshot
-    * version `v` with `content`. The content is written to a temp file
-    * first and exposed via hard-link creation — link succeeds atomically
-    * iff `manifest-v.tsv` does not exist yet, and a successful link is
-    * already fully-formed (no reader can see a half-written snapshot).
-    * Returns false when another writer holds `v` (caller re-reads and
-    * retries at the next version).
-    */
   /** Ops counter: CAS claim attempts that LOST the race (another writer
     * held the version). Monotonic, process-wide — the commit-throughput
     * measurement (SCALE.md) divides by successful commits for the
@@ -1124,6 +1027,14 @@ object ManifestFileIndex {
     */
   val casContentions = new java.util.concurrent.atomic.AtomicLong()
 
+  /** CAS primitive of the commit protocol: atomically claim snapshot
+    * version `v` with `content`. The content is written to a temp file
+    * first and exposed via hard-link creation — link succeeds atomically
+    * iff `manifest-v.tsv` does not exist yet, and a successful link is
+    * already fully-formed (no reader can see a half-written snapshot).
+    * Returns false when another writer holds `v` (caller re-reads and
+    * retries at the next version). Only [[commitDelta]] claims.
+    */
   private def tryClaim(rootDir: String, v: Int, content: String): Boolean = {
     val snapDir = new java.io.File(rootDir, SnapshotDir)
     snapDir.mkdirs()

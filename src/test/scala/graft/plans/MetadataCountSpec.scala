@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, DataSourceV2ScanRelation}
 import org.apache.spark.sql.graft.ManifestFileIndex
 
-import graft.SharedSpark.{spark, sf}
+import graft.SharedSpark.{spark, sf, tempDir}
 import graft.sources.{LakeIO, Tables}
 import graft.syntax._
 
@@ -18,7 +18,7 @@ import graft.syntax._
   */
 class MetadataCountSpec extends AnyFunSuite {
 
-  private val root = "/tmp/graft_lake_test/meta_count_spec"
+  private val root = tempDir("meta_count_spec").toString
 
   private def rm(f: java.io.File): Unit = {
     Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
@@ -101,10 +101,16 @@ class MetadataCountSpec extends AnyFunSuite {
     val p = s"$root/legacy"
     rm(new java.io.File(p))
     LakeIO.writeLake(events, p)
-    // strip the counts: commit the same live set with rowCount unknown,
-    // exactly what a manifest written before the `rows:` field looks like
-    val (partCol, entries) = ManifestFileIndex.read(p).get
-    ManifestFileIndex.commitEntries(p, partCol, entries.map(_.copy(rowCount = -1L)))
+    // strip the counts from the head snapshot and its mirror: exactly
+    // what a manifest written before the `rows:` field looks like
+    val head = ManifestFileIndex.headVersion(p).get
+    Seq(new java.io.File(s"$p/${ManifestFileIndex.SnapshotDir}", s"manifest-$head.tsv"),
+        new java.io.File(p, ManifestFileIndex.ManifestName)).foreach { f =>
+      val text = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+      java.nio.file.Files.write(f.toPath,
+        text.replaceAll("\trows:[0-9]+", "").getBytes("UTF-8"))
+    }
+    assert(ManifestFileIndex.read(p).get._2.forall(_.rowCount == -1L))
     val df = spark.read.format("graft-lake").load(p).groupBy().count()
     assert(!isMetadataOnly(df))
     assert(df.collect().head.getLong(0) == events.count())

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ManifestFileIndex
 
-import graft.SharedSpark.{spark, sf}
+import graft.SharedSpark.{spark, sf, tempDir}
 import graft.syntax._
 
 /** CREATE TABLE … [SHALLOW] CLONE … (Delta shallow-clone / Iceberg
@@ -18,7 +18,7 @@ class LakeCloneSpec extends AnyFunSuite {
   // selective: toDF support without StringToColumn (graft.syntax owns $)
   import spark.implicits.{newProductEncoder, localSeqToDatasetHolder}
 
-  private val base = "/tmp/graft_lake_test/clone_spec"
+  private val base = tempDir("clone_spec").toString
 
   private def rm(f: java.io.File): Unit = {
     Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()

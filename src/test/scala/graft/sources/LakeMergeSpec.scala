@@ -14,7 +14,7 @@ import graft.syntax._
   */
 class LakeMergeSpec extends AnyFunSuite {
 
-  private val root = "/tmp/graft_lake_test/merge_spec/events"
+  private val root = tempDir("merge_spec").toString + "/events"
 
   private def rm(f: java.io.File): Unit = {
     Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
@@ -59,10 +59,12 @@ class LakeMergeSpec extends AnyFunSuite {
     val afterUntouched = after.filterNot(e => touchedParts.contains(e.partValue))
       .map(_.relPath).toSet
     assert(beforeUntouched === afterUntouched)
-    // and every rewritten file is NEW (version-prefixed), old ones still on disk
+    // and every rewritten file is NEW (writer-unique name), old ones still on disk
     val rewritten = after.filter(e => touchedParts.contains(e.partValue))
     assert(rewritten.nonEmpty)
-    assert(rewritten.forall(_.relPath.split("/").last.startsWith("m2-")))
+    val beforePaths = before.map(_.relPath).toSet
+    assert(rewritten.forall(e => !beforePaths(e.relPath) &&
+      e.relPath.split("/").last.startsWith("m")))
     assert(before.forall(e => new java.io.File(root, e.relPath).exists()))
   }
 
@@ -164,8 +166,9 @@ class LakeMergeSpec extends AnyFunSuite {
     newOrphan.delete()
     // every live and parked (snapshot-referenced) file untouched
     assert(live.forall(p => new java.io.File(root, p).exists()))
-    assert(ManifestFileIndex.readParked(root).get
-      .forall(p => new java.io.File(root, p).exists()))
+    val parked = ManifestFileIndex.readParkedAt(root,
+      ManifestFileIndex.headVersion(root).get)
+    assert(parked.nonEmpty && parked.forall(p => new java.io.File(root, p).exists()))
     assert(readLake().count() ===
       upd.unionByName(base.join(upd.select($"event_id"), Seq("event_id"), "left_anti")).count())
   }
@@ -174,7 +177,7 @@ class LakeMergeSpec extends AnyFunSuite {
     val dir = tempDir("stats_rt").toString
     val e = ManifestFileIndex.Entry("2024-01-01-00", "ts_hour=2024-01-01-00/f.parquet",
       1L, 2L, strStats = Map("s_empty" -> ("", ""), "s_halfempty" -> ("", "61")))
-    ManifestFileIndex.commitEntries(dir, "ts_hour", Seq(e))
+    ManifestFileIndex.commitDelta(dir, "ts_hour", 0, Seq(e), Set.empty)
     val back = ManifestFileIndex.read(dir).get._2.head
     assert(back.strStats === e.strStats,
       s"empty-bound string stats must survive the TSV round trip: ${back.strStats}")

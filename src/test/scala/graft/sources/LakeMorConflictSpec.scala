@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.{CommitConflictException, ManifestFileIndex}
 
-import graft.SharedSpark.{spark, sf}
+import graft.SharedSpark.{spark, sf, tempDir}
 import graft.syntax._
 
 /** Concurrent-writer conflict semantics of the MoR DML family: writes
@@ -16,7 +16,7 @@ import graft.syntax._
   */
 class LakeMorConflictSpec extends AnyFunSuite {
 
-  private val base = "/tmp/graft_lake_test/mor_conflict_spec"
+  private val base = tempDir("mor_conflict_spec").toString
 
   private def rm(f: java.io.File): Unit = {
     Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()

@@ -4,19 +4,48 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.{CommitConflictException, ManifestFileIndex}
 
-import graft.SharedSpark.{spark, sf}
+import graft.SharedSpark.{spark, sf, tempDir}
 import graft.syntax._
+
+/** A one-shot hook fired from inside a running Spark job: the racing
+  * commit of the copy-on-write window specs below. Executors share the
+  * driver JVM under `local[n]`, so a task reaches the same object.
+  */
+object LakeRace {
+  private var pending: () => Unit = null
+  def arm(commit: => Unit): Unit = synchronized { pending = () => commit }
+  def fire(): Unit = {
+    val f = synchronized { val p = pending; pending = null; p }
+    if (f != null) f()
+  }
+}
+
+/** Fires [[LakeRace]] when a parquet write's job commits: the stage
+  * write of an op that takes no user expression to hook (compaction).
+  */
+class RaceCommitProtocol(jobId: String, path: String, dynamic: Boolean)
+  extends org.apache.spark.sql.execution.datasources.SQLHadoopMapReduceCommitProtocol(
+    jobId, path, dynamic) {
+  override def commitJob(ctx: org.apache.hadoop.mapreduce.JobContext,
+      commits: Seq[org.apache.spark.internal.io.FileCommitProtocol.TaskCommitMessage])
+    : Unit = {
+    super.commitJob(ctx, commits)
+    LakeRace.fire()
+  }
+}
 
 /** Optimistic concurrency on the lake commit protocol: uncoordinated
   * writers never lose a commit (appends rebase through the version-claim
-  * CAS), genuine write-write file conflicts abort exactly one loser, and
-  * HEAD/snapshot state stays consistent throughout. This is the property
+  * CAS), genuine write-write file conflicts abort exactly one loser, a
+  * copy-on-write rewrite keeps an append that lands inside its window and
+  * conflicts on a deletion vector that does, and HEAD/snapshot state
+  * stays consistent throughout. This is the property
   * that lets N streaming sinks + a compactor + a deleter share one 100 TB
   * table with no coordination service.
   */
 class LakeOccSpec extends AnyFunSuite {
 
-  private val base = "/tmp/graft_lake_test/occ_spec"
+  private val base = tempDir("occ_spec").toString
 
   private def rm(f: java.io.File): Unit = {
     Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
@@ -85,7 +114,7 @@ class LakeOccSpec extends AnyFunSuite {
       f"2024-01-01-${t % 24}%02d",
       f"ts_hour=2024-01-01-${t % 24}%02d/part-$t%02d-$k%04d.parquet",
       1L, 0L, Map.empty, Map.empty, Map.empty, 1L)
-    ManifestFileIndex.commitEntries(root, "ts_hour", Seq(entry(23, 9999)))
+    ManifestFileIndex.commitDelta(root, "ts_hour", 0, Seq(entry(23, 9999)), Set.empty)
     val v0 = ManifestFileIndex.headVersion(root).get
     val (nWriters, perWriter) = (8, 10)
     val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
@@ -246,27 +275,6 @@ class LakeOccSpec extends AnyFunSuite {
         .where($"event_id" >= 9000000L).count() == appended.count())
   }
 
-  test("commitEntries racers can never share a snapshot version") {
-    val root = s"$base/version_race"
-    rm(new java.io.File(root))
-    LakeIO.writeLake(events.where($"event_id" < 50), root)
-    val v0 = ManifestFileIndex.headVersion(root).get
-    val entries = ManifestFileIndex.read(root).get._2
-
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-    (0 until 4).foreach { _ =>
-      pool.execute(() => ManifestFileIndex.commitEntries(root, "ts_hour", entries))
-    }
-    pool.shutdown()
-    assert(pool.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS))
-
-    // four commits → four distinct snapshot files, head at the last
-    assert(ManifestFileIndex.headVersion(root).get == v0 + 4)
-    val snaps = (1 to v0 + 4).map(v =>
-      new java.io.File(s"$root/${ManifestFileIndex.SnapshotDir}", s"manifest-$v.tsv"))
-    assert(snaps.forall(_.exists()))
-  }
-
   test("history ledger: a 500-commit table's DESCRIBE HISTORY plans from ONE file") {
     val root = s"$base/ledger"
     rm(new java.io.File(root))
@@ -312,5 +320,121 @@ class LakeOccSpec extends AnyFunSuite {
     val after = LakeIO.history(spark, root).collect().map(_.getLong(0))
     assert(after.length == 10 && after.head == (head - 9).toLong,
       s"expired versions must leave DESCRIBE HISTORY, got ${after.toSeq}")
+  }
+
+  // ---------------------------------------------------------------------
+  // Copy-on-write ops racing a commit inside their read→commit window.
+  // The racing commit is metadata-only (a commitDelta of files written
+  // beforehand), fired once from inside the op's own Spark job, so the
+  // interleaving is deterministic and no nested job runs.
+  // ---------------------------------------------------------------------
+
+  /** Files holding `rows`, moved into `root`'s partition directories
+    * under fresh names and committed nowhere: a racing append's payload.
+    */
+  private def prewritten(root: String,
+      rows: org.apache.spark.sql.DataFrame): Seq[ManifestFileIndex.Entry] = {
+    val scratch = tempDir("race_src").toString + "/t"
+    LakeIO.writeLake(rows, scratch)
+    ManifestFileIndex.read(scratch).get._2.map { e =>
+      val Array(dir, name) = e.relPath.split('/')
+      new java.io.File(root, dir).mkdirs()
+      java.nio.file.Files.move(new java.io.File(scratch, e.relPath).toPath,
+        new java.io.File(root, s"$dir/race-$name").toPath)
+      e.copy(relPath = s"$dir/race-$name")
+    }
+  }
+
+  private def racingAppend(root: String, files: Seq[ManifestFileIndex.Entry]): Unit =
+    LakeRace.arm {
+      ManifestFileIndex.commitDelta(root, "ts_hour",
+        ManifestFileIndex.claimedVersion(root), files, Set.empty)
+      ()
+    }
+
+  private def raceRows = events.where($"event_id" < 10)
+    .withColumn("event_id", $"event_id" + 7000000L)
+
+  private def head(root: String) = spark.read.format("graft-lake").load(root)
+    .select($"event_id", $"ts", $"event_type", $"value")
+
+  test("deleteWhere keeps rows appended inside its read→commit window") {
+    val root = s"$base/cow_delete_race"
+    LakeIO.writeLake(events.where($"event_id" < 300), root)
+    val files = prewritten(root, raceRows)
+    val v0 = ManifestFileIndex.headVersion(root).get
+    racingAppend(root, files)
+    val doomed = udf { (id: Long) => LakeRace.fire(); id % 3 == 0 }
+    LakeIO.deleteWhere(spark, root, doomed($"event_id"))
+
+    // the append landed mid-delete, and the delete serialized before it
+    assert(ManifestFileIndex.headVersion(root).get == v0 + 2)
+    assert(head(root).where($"event_id" >= 7000000L).count() == raceRows.count(),
+      "the concurrently appended rows must survive the delete's commit")
+    val kept = events.where($"event_id" < 300 && $"event_id" % 3 =!= 0)
+    val live = head(root).where($"event_id" < 7000000L)
+    assert(live.count() == kept.count())
+    assert(live.except(kept).isEmpty && kept.except(live).isEmpty)
+  }
+
+  test("compactSnapshots keeps a concurrent append") {
+    val root = s"$base/cow_compact_race"
+    LakeIO.writeLake(events.where($"event_id" < 200), root)
+    // the same hours again: every partition holds two files
+    LakeIO.appendTxn(events.where($"event_id" < 200)
+      .withColumn("event_id", $"event_id" + 1000000L), root)
+    val files = prewritten(root, raceRows)
+    val before = head(root).count()
+    val v0 = ManifestFileIndex.headVersion(root).get
+    val key = "spark.sql.sources.commitProtocolClass"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, classOf[RaceCommitProtocol].getName)
+    try {
+      racingAppend(root, files)
+      LakeIO.compactSnapshots(spark, root)
+    } finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+
+    assert(ManifestFileIndex.headVersion(root).get == v0 + 2)
+    val live = ManifestFileIndex.read(root).get._2.map(_.relPath).toSet
+    assert(files.forall(e => live(e.relPath)),
+      "the compaction must not revert the append committed inside its window")
+    assert(head(root).count() == before + raceRows.count())
+    assert(ManifestFileIndex.read(root).get._2.groupBy(_.partValue)
+      .forall(_._2.count(e => !files.exists(_.relPath == e.relPath)) == 1),
+      "every fragmented partition was compacted to one file")
+  }
+
+  test("a deletion vector landing inside a CoW op's window conflicts the op") {
+    val root = s"$base/cow_dv_race"
+    LakeIO.writeLake(events.where($"event_id" < 300), root)
+    // the racing MoR delete's sidecar, written beforehand: positions of
+    // every row with event_id % 5 == 0
+    val dvRel = "_graft_dv/dv-race"
+    LakeIO.positionedScan(spark, root,
+        ManifestFileIndex.read(root).get._2.map(_.relPath), None)
+      .where($"event_id" % 5 === 0).select($"_dv_file", $"_dv_pos")
+      .write.parquet(s"$root/$dvRel")
+    val v0 = ManifestFileIndex.headVersion(root).get
+    LakeRace.arm {
+      ManifestFileIndex.commitDelta(root, "ts_hour",
+        ManifestFileIndex.claimedVersion(root), Seq.empty, Set.empty,
+        addDvs = Seq(dvRel))
+      ()
+    }
+    val hit = udf { (id: Long) => LakeRace.fire(); id % 7 == 0 }
+    val err = intercept[CommitConflictException] {
+      LakeIO.updateWhere(spark, root, hit($"event_id"),
+        Seq("value" -> ($"value" + 1000.0)))
+    }
+    assert(err.getMessage.contains("deletion vector"))
+
+    // the DV commit is the head, and its rows stay deleted
+    assert(ManifestFileIndex.headVersion(root).get == v0 + 1)
+    assert(ManifestFileIndex.readDvs(root) == Seq(dvRel))
+    val want = events.where($"event_id" < 300 && $"event_id" % 5 =!= 0)
+    val got = LakeIO.readMoR(spark, root)
+      .select($"event_id", $"ts", $"event_type", $"value")
+    assert(got.count() == want.count())
+    assert(got.except(want).isEmpty && want.except(got).isEmpty)
   }
 }

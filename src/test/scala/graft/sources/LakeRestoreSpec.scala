@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ManifestFileIndex
 
-import graft.SharedSpark.{spark, sf}
+import graft.SharedSpark.{spark, sf, tempDir}
 import graft.syntax._
 
 /** Table RESTORE (Iceberg rollback_to_snapshot / Delta RESTORE):
@@ -16,7 +16,7 @@ import graft.syntax._
   */
 class LakeRestoreSpec extends AnyFunSuite {
 
-  private val base = "/tmp/graft_lake_test/restore_spec"
+  private val base = tempDir("restore_spec").toString
 
   private def rm(f: java.io.File): Unit = {
     Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
