@@ -114,7 +114,13 @@ object Bench {
     // allocation/GC noise rather than a plan change.
     val queries = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
+    // per key: the full materialization's seconds (`samples`, what
+    // Verify writes), the legacy count()'s seconds (`countSamples`: Catalyst
+    // drops sorts and unused projections under a count) and the jobs the
+    // full materialization launched
     val samples = scala.collection.mutable.Map.empty[String, List[Double]]
+    val countSamples = scala.collection.mutable.Map.empty[String, List[Double]]
+    val jobSamples = scala.collection.mutable.Map.empty[String, List[Int]]
     // a query that throws is an error, never a sample: a throw after
     // 50 ms would otherwise read as a 20x speedup. Last cause per key.
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
@@ -124,22 +130,29 @@ object Bench {
     val outName = if (only.isDefined) "bench_only.json" else "bench.json"
 
     def render(passes: Int, deadlineHit: Boolean): String = {
-      val results = queries.flatMap { case (name, _) =>
-        samples.get(name).filter(_.nonEmpty).map { raw =>
-          val ts = raw.sorted
-          (name, ts(ts.length / 2), ts.head)
+      // (key, median, min) of every key with a sample
+      def summarize(m: scala.collection.Map[String, List[Double]]) =
+        queries.flatMap { case (name, _) =>
+          m.get(name).filter(_.nonEmpty).map { raw =>
+            val ts = raw.sorted
+            (name, ts(ts.length / 2), ts.head)
+          }
         }
-      }
-      def jmap(kv: Seq[(String, Double)]): String =
+      val results = summarize(samples)
+      val counts = summarize(countSamples)
+      def jmap(kv: Seq[(String, Any)]): String =
         kv.map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
       // per-sample arrays make bench.json SELF-DIAGNOSING: a flagged query
       // whose samples are bimodal (one clean sample under the bar) is a
       // host hiccup recurring at the same suite position, not a plan
       // change — bench_compare labels it noise-suspect instead of burning
       // a session on a standalone re-run (r11 adjudication cost)
-      val jsamples: String = results.map { case (name, _, _) =>
-        s"\"" + name + "\":" + samples(name).reverse.mkString("[", ",", "]")
-      }.mkString("{", ",", "}")
+      def jsamples(m: scala.collection.Map[String, List[Double]]): String =
+        jmap(summarize(m).map { case (name, _, _) => name -> m(name).reverse.mkString("[", ",", "]") })
+      val jobs = results.map { case (name, _, _) =>
+        val js = jobSamples(name).sorted
+        name -> js(js.length / 2)
+      }
       val jerrors = errors.map { case (k, v) =>
         Verify.jsonString(k) + ":" + Verify.jsonString(v) }.mkString("{", ",", "}")
       val total = results.map(_._2).sum
@@ -150,7 +163,11 @@ object Bench {
       s"""{"metric":"total","value":$total,"unit":"sec","value_min":$totalMin,""" +
         s""""queries":${jmap(results.map(r => (r._1, r._2)))},""" +
         s""""queries_min":${jmap(results.map(r => (r._1, r._3)))},""" +
-        s""""samples":$jsamples,"sf":"$sfDir","errors":$jerrors,""" +
+        s""""samples":${jsamples(samples)},""" +
+        s""""queries_count":${jmap(counts.map(r => (r._1, r._2)))},""" +
+        s""""queries_count_min":${jmap(counts.map(r => (r._1, r._3)))},""" +
+        s""""samples_count":${jsamples(countSamples)},""" +
+        s""""queries_jobs":${jmap(jobs)},"sf":"$sfDir","errors":$jerrors,""" +
         s""""passes":$passes,"keys":${results.length},"deadline_hit":$deadlineHit,""" +
         s""""requested_cpus":$requested,"effective_cpus":$cpus,""" +
         s""""cgroup_quota_cores":${quota.getOrElse(-1)},""" +
@@ -179,21 +196,29 @@ object Bench {
     while (pass < rounds && !deadlineHit) {
       val t0p = System.nanoTime()
       queries.foreach { case (name, fn) => if (!deadlineHit) {
-        val t0 = System.nanoTime()
-        try {
-          fn(spark, sfDir).count()
-          val dt = (System.nanoTime() - t0) / 1e9
-          samples(name) = dt :: samples.getOrElse(name, Nil)
-        } catch { case scala.util.control.NonFatal(e) =>
-          errors(name) = String.valueOf(e).linesIterator.nextOption().getOrElse("")
-        }
         // Dedup/similarity ops persist() intermediates (shingle sets etc.)
         // that only the returned plan's execution needs — each run creates
         // a NEW cache entry and nothing unpersists, so 300+ dead caches
         // would accumulate across the registry and GC-starve later
-        // (alphabetically: lake_*) queries. Every query benches
-        // cold-cache instead: stable AND comparable.
-        spark.catalog.clearCache()
+        // (alphabetically: lake_*) queries. Every run benches cold-cache
+        // instead: stable AND comparable.
+        def seconds(run: => Unit): Double = {
+          val t0 = System.nanoTime()
+          try { run; (System.nanoTime() - t0) / 1e9 } finally spark.catalog.clearCache()
+        }
+        try {
+          // the count first, at the position the count-only bench ran it
+          val countS = seconds(fn(spark, sfDir).count())
+          // then the full plan, materialized as Verify writes it, under
+          // its own job group (jobs counted once the listener bus drains)
+          val (fullS, jobs) = org.apache.spark.graft.JobCount(spark.sparkContext)(
+            seconds(fn(spark, sfDir).write.format("noop").mode("overwrite").save()))
+          countSamples(name) = countS :: countSamples.getOrElse(name, Nil)
+          samples(name) = fullS :: samples.getOrElse(name, Nil)
+          jobSamples(name) = jobs :: jobSamples.getOrElse(name, Nil)
+        } catch { case scala.util.control.NonFatal(e) =>
+          errors(name) = String.valueOf(e).linesIterator.nextOption().getOrElse("")
+        }
         // flush after EVERY query: an external kill at ANY point leaves
         // a parseable bench.json with every sample taken so far
         flush(pass, deadlineHit = false)

@@ -7,7 +7,10 @@ import org.apache.spark.sql.SparkSessionExtensions
   * as-of strategy, the DML and maintenance-SQL intercepts, and the
   * engine's native SQL functions (so the SQL text path can call
   * `vector_dot(a, b)`). Hidden hour(ts) pruning needs no rule: the
-  * graft-lake source derives it at its scan builder.
+  * graft-lake source derives it at its scan builder. One AQE query-stage
+  * preparation rule, [[CoalesceSmallSort]], runs a global sort whose
+  * input fits AQE's one-partition coalescing size in a single task
+  * (no range-partitioner sampling job, no range shuffle).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
@@ -15,6 +18,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectOptimizerRule(_ => MetadataOnlyCount)
     e.injectOptimizerRule(_ => MaterializedViewRewrite)
     e.injectPlannerStrategy(_ => AsOfJoinStrategy)
+    e.injectQueryStagePrepRule(_ => CoalesceSmallSort)
     // SQL UPDATE / upsert-shaped MERGE INTO on graft-lake tables →
     // stats-pruned copy-on-write commands (resolution-time, before
     // Spark's row-level rewrite rejects the table)

@@ -129,17 +129,103 @@ class PlanShapeSpec extends AnyFunSuite {
       }
   }
 
-  test("perfbench's lake_pruned_scan shape carries the ts_hour bounds in PartitionFilters") {
-    // the analytics benchmark's pruned lake read: raw ts bounds written
-    // as string casts, a projection and a sort over the graft-lake source
-    import org.apache.spark.sql.catalyst.expressions.{Attribute, GreaterThanOrEqual, LessThanOrEqual, Literal}
-    import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
-    import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan
-    val (from, to) = ("2024-01-05 00:00:00", "2024-01-06 00:00:00")
-    val df = Graft.lake.read(spark, graft.sources.LakeIO.ensureLake(spark, sf))
+  private val prunedRange = ("2024-01-05 00:00:00", "2024-01-06 00:00:00")
+
+  /** perfbench's lake_pruned_scan: raw ts bounds written as string casts,
+    * a projection and a sort over the graft-lake source. */
+  private def prunedScan(lake: String) = {
+    val (from, to) = prunedRange
+    Graft.lake.read(spark, lake)
       .where(col("ts") >= lit(from).cast("timestamp") && col("ts") < lit(to).cast("timestamp"))
       .select("event_id", "ts", "event_type", "value", "user_id")
       .orderBy("event_id")
+  }
+
+  private val aqe = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+
+  /** Runs `df` and returns its global sorts' inputs and range exchanges
+    * from the final (adaptive) plan. */
+  private def sortShape(df: org.apache.spark.sql.DataFrame) = {
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.{InputAdapter, SortExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    df.collect()
+    val plan = df.queryExecution.executedPlan
+    val sortInputs = aqe.collect(plan) { case s: SortExec if s.global => s.child match {
+      case InputAdapter(c) => c
+      case c => c
+    } }
+    val ranges = aqe.collect(plan) {
+      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
+    }
+    (sortInputs, ranges, plan)
+  }
+
+  private def withConf[T](kv: (String, String))(body: => T): T = {
+    val prior = spark.conf.getOption(kv._1)
+    spark.conf.set(kv._1, kv._2)
+    try body finally prior match {
+      case Some(v) => spark.conf.set(kv._1, v)
+      case None => spark.conf.unset(kv._1)
+    }
+  }
+
+  test("a small global sort runs in one task; large, user-ranged, nondeterministic and non-AQE sorts keep their range exchange") {
+    import org.apache.spark.sql.execution.CoalesceExec
+    // positive: below AQE's one-partition coalescing size the range
+    // exchange (sampling job + shuffle) becomes CoalesceExec(1)
+    val lake = graft.sources.LakeIO.ensureLake(spark, sf)
+    Seq("q1_pricing" -> (() => SparkEntry.queries("q1_pricing")(spark, sf)),
+        "q8_market_share" -> (() => SparkEntry.queries("q8_market_share")(spark, sf)),
+        "lake_pruned_scan" -> (() => prunedScan(lake))).foreach { case (k, build) =>
+      val (inputs, ranges, plan) = sortShape(build())
+      assert(ranges.isEmpty, s"$k keeps a range exchange:\n" + plan.toString.take(1200))
+      assert(inputs.nonEmpty && inputs.forall(_.isInstanceOf[CoalesceExec]),
+        s"$k: no CoalesceExec under its sort:\n" + plan.toString.take(1200))
+    }
+    // the one-task sort returns the rows the range-partitioned sort does
+    val q1 = SparkEntry.queries("q1_pricing")(spark, sf).collect().toSeq
+    // negative: an input above the one-partition size keeps the exchange
+    withConf("spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1") {
+      val df = SparkEntry.queries("q1_pricing")(spark, sf)
+      val (_, ranges, plan) = sortShape(df)
+      assert(ranges.nonEmpty, "q1_pricing over a 1-byte size lost its range exchange:\n" +
+        plan.toString.take(1200))
+      assert(df.collect().toSeq === q1)
+    }
+    // user range partitioning is a requested layout, not a sort's
+    val (_, userRanges, userPlan) = sortShape(spark.range(0, 1000, 1, 4).toDF()
+      .repartitionByRange(4, col("id")))
+    assert(userRanges.nonEmpty, "repartitionByRange lost its exchange:\n" + userPlan)
+    // one task would renumber monotonically_increasing_id
+    val (_, mRanges, mPlan) = sortShape(spark.range(0, 1000, 1, 4)
+      .withColumn("m", monotonically_increasing_id()).orderBy(col("m").desc))
+    assert(mRanges.nonEmpty, "a sort over nondeterministic input lost its exchange:\n" + mPlan)
+    // the rule is an AQE query-stage rule: without AQE nothing changes
+    withConf("spark.sql.adaptive.enabled" -> "false") {
+      val (_, ranges, plan) = sortShape(SparkEntry.queries("q1_pricing")(spark, sf))
+      assert(ranges.nonEmpty, "non-AQE q1_pricing lost its range exchange:\n" + plan)
+    }
+  }
+
+  test("small global sorts launch no sampling or range-shuffle jobs") {
+    // per noop write: q1_pricing = aggregate shuffle + result (a range
+    // exchange adds its sampling job and its shuffle, 4 in all);
+    // lake_pruned_scan = the result job alone (3 with the exchange)
+    import org.apache.spark.graft.JobCount
+    val lake = graft.sources.LakeIO.ensureLake(spark, sf)
+    def jobs(df: org.apache.spark.sql.DataFrame): Int =
+      JobCount(spark.sparkContext)(df.write.format("noop").mode("overwrite").save())._2
+    assert(jobs(SparkEntry.queries("q1_pricing")(spark, sf)) === 2)
+    assert(jobs(prunedScan(lake)) === 1)
+  }
+
+  test("perfbench's lake_pruned_scan shape carries the ts_hour bounds in PartitionFilters") {
+    import org.apache.spark.sql.catalyst.expressions.{Attribute, GreaterThanOrEqual, LessThanOrEqual, Literal}
+    import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
+    import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan
+    val (from, to) = prunedRange
+    val df = prunedScan(graft.sources.LakeIO.ensureLake(spark, sf))
     val scan = df.queryExecution.optimizedPlan.collectFirst {
       case r: DataSourceV2ScanRelation => r.scan
     }.collect {

@@ -12,6 +12,10 @@ object SharedSpark {
   private lazy val tmpRoot: Path = {
     val root = Files.createTempDirectory("graft_test")
     sys.addShutdownHook(graft.sources.LakeIO.rmDir(root.toString))
+    // Derby writes its error log to ./derby.log unless told otherwise;
+    // read at the engine's first boot, which follows this (the specs'
+    // Derby directories come from tempDir)
+    sys.props("derby.stream.error.file") = root.resolve("derby.log").toString
     root
   }
 

@@ -5,7 +5,7 @@ import java.net.URI
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SharedSpark.spark
+import graft.SharedSpark.{spark, tempDir}
 import graft.streaming.{JdbcUpsert, Sources}
 
 /** The HTTP ingest edge (reference logging-server/server.py:42-99):
@@ -15,6 +15,8 @@ import graft.streaming.{JdbcUpsert, Sources}
   * upsert → dashboard HTTP serving.
   */
 class IngestServerSpec extends AnyFunSuite {
+  private val testRoot = tempDir("ingest_server").toString
+
   import spark.implicits._
 
   private val client = HttpClient.newHttpClient()
@@ -27,7 +29,7 @@ class IngestServerSpec extends AnyFunSuite {
   }
 
   private def freshDir(name: String): String = {
-    val dir = s"/tmp/graft_ingest/$name"
+    val dir = s"$testRoot/$name"
     def rm(f: java.io.File): Unit = {
       Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
     }

@@ -7,7 +7,7 @@ import java.time.Instant
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
-import graft.SharedSpark.spark
+import graft.SharedSpark.{spark, tempDir}
 import graft.streaming.{JdbcUpsert, WeatherPipeline}
 
 /** The dashboard-serving contract (reference server.js:34-110 +
@@ -17,6 +17,8 @@ import graft.streaming.{JdbcUpsert, WeatherPipeline}
   * TTL snapshot, and the full loop stream → Derby upsert → HTTP.
   */
 class ServingServerSpec extends AnyFunSuite {
+  private val testRoot = tempDir("serving_server").toString
+
   import spark.implicits._
 
   private val client = HttpClient.newHttpClient()
@@ -114,7 +116,7 @@ class ServingServerSpec extends AnyFunSuite {
   }
 
   test("full loop: stream → windowed agg → Derby upsert → HTTP serving") {
-    val dir = "/tmp/graft_derby/serving"
+    val dir = s"$testRoot/serving"
     def rm(f: java.io.File): Unit = {
       Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
     }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ManifestFileIndex
 
-import graft.SharedSpark.{spark, sf}
+import graft.SharedSpark.{spark, sf, tempDir}
 import graft.syntax._
 
 /** The renamed/mixed-era scan guard (GraftLakeSource.newScanBuilder) with
@@ -22,7 +22,9 @@ import graft.syntax._
   */
 class BareSessionGuardSpec extends AnyFunSuite {
 
-  private val base = "/tmp/graft_lake_test/bare_guard_spec"
+  private val testRoot = tempDir("bare_session_guard").toString
+
+  private val base = s"$testRoot/bare_guard_spec"
 
   private def rm(f: java.io.File): Unit = {
     Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ManifestFileIndex
 
-import graft.SharedSpark.{spark, sf}
+import graft.SharedSpark.{spark, sf, tempDir}
 import graft.functions.BloomSketch
 import graft.syntax._
 
@@ -14,7 +14,9 @@ import graft.syntax._
   */
 class BloomIndexSpec extends AnyFunSuite {
 
-  private val root = "/tmp/graft_lake_test/bloom_spec"
+  private val testRoot = tempDir("bloom_index").toString
+
+  private val root = s"$testRoot/bloom_spec"
 
   private def rm(f: java.io.File): Unit = {
     Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()

@@ -3,7 +3,7 @@ package graft.sources
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.SharedSpark.spark
+import graft.SharedSpark.{spark, tempDir}
 
 /** Write-time data-quality expectations: passing rows commit, each
   * failing row is quarantined with the names of the expectations it
@@ -12,9 +12,11 @@ import graft.SharedSpark.spark
   * corpus).
   */
 class ExpectationsSpec extends AnyFunSuite {
+  private val testRoot = tempDir("expectations").toString
+
   import spark.implicits._
 
-  private val root = "/tmp/graft_lake_test/expect/t"
+  private val root = s"$testRoot/expect/t"
 
   private def rm(p: String): Unit = {
     def go(f: java.io.File): Unit = {

@@ -4,13 +4,15 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ManifestFileIndex
 
-import graft.SharedSpark.spark
+import graft.SharedSpark.{spark, tempDir}
 
 /** Branch staging (multi-commit WAP): a chain of staged appends invisible
   * on main, readable as one state, published as one squashed rebased
   * commit or dropped without a trace.
   */
 class LakeBranchSpec extends AnyFunSuite {
+  private val testRoot = tempDir("lake_branch").toString
+
   import spark.implicits._
 
   private def rm(f: java.io.File): Unit = {
@@ -22,7 +24,7 @@ class LakeBranchSpec extends AnyFunSuite {
       .withColumn("ts", to_timestamp(lit("2024-01-01 00:00:01")))
 
   test("branch appends accumulate invisibly; publish squashes and rebases over main") {
-    val root = "/tmp/graft_lake_test/branch_spec/items"
+    val root = s"$testRoot/branch_spec/items"
     rm(new java.io.File(root))
     LakeIO.writeLake(df("orig", 1L, 2L), root)
     val v0 = ManifestFileIndex.headVersion(root).get
@@ -50,7 +52,7 @@ class LakeBranchSpec extends AnyFunSuite {
   }
 
   test("branch reader option + SQL surface: SHOW/PUBLISH/DROP BRANCH") {
-    val wh = "/tmp/graft_lake_test/branch_sql"
+    val wh = s"$testRoot/branch_sql"
     rm(new java.io.File(wh))
     val root = s"$wh/default/items"
     LakeIO.writeLake(df("orig", 1L, 2L), root)
@@ -87,7 +89,7 @@ class LakeBranchSpec extends AnyFunSuite {
     // sees compose explicitly or refuse. branch resolves to a stagedAsOf
     // read, so a co-passed travel/changefeed option would silently win
     // or lose depending on which the downstream scan prefers.
-    val root = "/tmp/graft_lake_test/branch_spec/combine"
+    val root = s"$testRoot/branch_spec/combine"
     rm(new java.io.File(root))
     LakeIO.writeLake(df("orig", 1L), root)
     LakeIO.appendToBranch(df("b1", 10L), root, "exp")
@@ -110,7 +112,7 @@ class LakeBranchSpec extends AnyFunSuite {
   }
 
   test("dropBranch abandons every staged append without touching the table") {
-    val root = "/tmp/graft_lake_test/branch_spec_drop/items"
+    val root = s"$testRoot/branch_spec_drop/items"
     rm(new java.io.File(root))
     LakeIO.writeLake(df("orig", 1L), root)
     LakeIO.appendToBranch(df("x1", 20L), root, "dead")

@@ -5,7 +5,7 @@ import org.apache.spark.graft.JobCount
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ManifestFileIndex
 
-import graft.SharedSpark.spark
+import graft.SharedSpark.{spark, tempDir}
 
 /** Table CHECK constraints (Delta ADD CONSTRAINT parity): named SQL
   * predicates in table metadata, enforced on every row-introducing write
@@ -13,6 +13,8 @@ import graft.SharedSpark.spark
   * rows skip re-validation.
   */
 class LakeConstraintSpec extends AnyFunSuite {
+  private val testRoot = tempDir("lake_constraint").toString
+
   import spark.implicits._
 
   private def rm(f: java.io.File): Unit = {
@@ -24,7 +26,7 @@ class LakeConstraintSpec extends AnyFunSuite {
       .withColumn("ts", to_timestamp(lit("2024-01-01 00:00:01")))
 
   private def fresh(name: String, rows: (Long, java.lang.Double)*): String = {
-    val root = s"/tmp/graft_lake_test/constraint_spec/$name"
+    val root = s"$testRoot/constraint_spec/$name"
     rm(new java.io.File(root))
     LakeIO.writeLake(df(rows: _*), root)
     root
@@ -258,7 +260,7 @@ class LakeConstraintSpec extends AnyFunSuite {
   }
 
   test("SQL surface: ADD/SHOW/DROP CONSTRAINT through the catalog") {
-    val wh = "/tmp/graft_lake_test/constraint_spec/sqlwh"
+    val wh = s"$testRoot/constraint_spec/sqlwh"
     rm(new java.io.File(wh))
     val root = s"$wh/default/items"
     LakeIO.writeLake(df(1L -> Double.box(5.0)), root)

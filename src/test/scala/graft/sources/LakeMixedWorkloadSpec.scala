@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ManifestFileIndex
 
-import graft.SharedSpark.{spark, sf}
+import graft.SharedSpark.{spark, sf, tempDir}
 import graft.syntax._
 
 /** The whole round-4 lake tier under ONE concurrent mixed workload:
@@ -17,12 +17,14 @@ import graft.syntax._
   */
 class LakeMixedWorkloadSpec extends AnyFunSuite {
 
+  private val testRoot = tempDir("lake_mixed_workload").toString
+
   private def rm(f: java.io.File): Unit = {
     Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
   }
 
   test("concurrent appenders + MoR deleter + tagger + WAP publish: exact row conservation") {
-    val root = "/tmp/graft_lake_test/mixed_workload/events"
+    val root = s"$testRoot/mixed_workload/events"
     rm(new java.io.File(root))
     val events = Tables.events(spark, sf)
       .select($"event_id", $"ts", $"event_type", $"value")

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ManifestFileIndex
 
-import graft.SharedSpark.{spark, sf}
+import graft.SharedSpark.{spark, sf, tempDir}
 import graft.syntax._
 
 /** Merge-on-read MERGE (mergeIntoMoR): the upsert commits a deletion
@@ -14,7 +14,9 @@ import graft.syntax._
   */
 class LakeMorMergeSpec extends AnyFunSuite {
 
-  private val base = "/tmp/graft_lake_test/mor_merge_spec"
+  private val testRoot = tempDir("lake_mor_merge").toString
+
+  private val base = s"$testRoot/mor_merge_spec"
 
   private def rm(f: java.io.File): Unit = {
     Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ManifestFileIndex
 
-import graft.SharedSpark.{spark, sf}
+import graft.SharedSpark.{spark, sf, tempDir}
 import graft.syntax._
 
 /** Merge-on-read deletes (deletion vectors): a delete commits a position
@@ -14,7 +14,9 @@ import graft.syntax._
   */
 class LakeMorSpec extends AnyFunSuite {
 
-  private val base = "/tmp/graft_lake_test/mor_spec"
+  private val testRoot = tempDir("lake_mor").toString
+
+  private val base = s"$testRoot/mor_spec"
 
   private def rm(f: java.io.File): Unit = {
     Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ManifestFileIndex
 
-import graft.SharedSpark.{spark, sf}
+import graft.SharedSpark.{spark, sf, tempDir}
 import graft.syntax._
 
 /** Partition-spec evolution (Iceberg-style): a day(ts)-partitioned table
@@ -17,7 +17,9 @@ import graft.syntax._
   */
 class LakePartitionEvolutionSpec extends AnyFunSuite {
 
-  private val base = "/tmp/graft_lake_test/part_evolution_spec"
+  private val testRoot = tempDir("lake_partition_evolution").toString
+
+  private val base = s"$testRoot/part_evolution_spec"
 
   private def rm(f: java.io.File): Unit = {
     Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()

@@ -13,6 +13,8 @@ import graft.SharedSpark.{spark, tempDir}
   * commit.
   */
 class LakeRefsSpec extends AnyFunSuite {
+  private val testRoot = tempDir("lake_refs").toString
+
   import spark.implicits._
 
   private def rm(f: java.io.File): Unit = {
@@ -95,7 +97,7 @@ class LakeRefsSpec extends AnyFunSuite {
   }
 
   test("tagged snapshot survives expireSnapshots; untagged contemporaries expire") {
-    val root = "/tmp/graft_lake_test/refs_expire/items"
+    val root = s"$testRoot/refs_expire/items"
     fresh(root, 1L -> "a")
     LakeIO.tagSnapshot(root, "pinned") // v1
     // five more commits so v1 falls far behind the keep window
@@ -110,7 +112,7 @@ class LakeRefsSpec extends AnyFunSuite {
   }
 
   test("WAP: staged append invisible at head, audit sees it, publish rebases over concurrent commits") {
-    val root = "/tmp/graft_lake_test/refs_wap/items"
+    val root = s"$testRoot/refs_wap/items"
     fresh(root, 1L -> "a", 2L -> "b")
     val headBefore = ManifestFileIndex.headVersion(root).get
 
@@ -134,7 +136,7 @@ class LakeRefsSpec extends AnyFunSuite {
   }
 
   test("WAP: failed audit drops the stage; orphan cleanup spares a pending stage") {
-    val root = "/tmp/graft_lake_test/refs_wap_drop/items"
+    val root = s"$testRoot/refs_wap_drop/items"
     fresh(root, 1L -> "a")
 
     LakeIO.stageAppend(df(99L -> "bad"), root, "rejected")

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ManifestFileIndex
 import org.apache.spark.sql.types.{IntegerType, LongType}
 
-import graft.SharedSpark.{spark, sf}
+import graft.SharedSpark.{spark, sf, tempDir}
 import graft.syntax._
 
 /** Column RENAME via field-history mapping (the last schema-evolution
@@ -16,7 +16,9 @@ import graft.syntax._
   */
 class LakeRenameSpec extends AnyFunSuite {
 
-  private val base = "/tmp/graft_lake_test/rename_spec"
+  private val testRoot = tempDir("lake_rename").toString
+
+  private val base = s"$testRoot/rename_spec"
 
   private def rm(f: java.io.File): Unit = {
     Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()

@@ -8,13 +8,15 @@ import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.types.LongType
 
-import graft.SharedSpark.{spark, sf}
+import graft.SharedSpark.{spark, sf, tempDir}
 import graft.syntax._
 
 /** File-level min/max skipping from manifest column metrics: a pushed
   * long-column predicate eliminates whole files at PLANNING time.
   */
 class LakeStatsSpec extends AnyFunSuite {
+
+  private val testRoot = tempDir("lake_stats").toString
 
   private lazy val path = LakeIO.ensureLake(spark, sf)
 
@@ -140,7 +142,7 @@ class LakeStatsSpec extends AnyFunSuite {
 
   test("a pushed string equality plans fewer files via UTF8 bounds") {
     // per-hour-distinct category → every file has a tight string range
-    val catLake = s"/tmp/graft_lake_test/strstats_${sf.replaceAll("[^A-Za-z0-9.]", "_")}"
+    val catLake = s"$testRoot/strstats"
     val df = spark.range(4000).select(
       $"id".as("event_id"),
       expr("timestampadd(HOUR, CAST(id / 1000 AS INT), timestamp'2024-03-01 00:00:00')")
@@ -159,7 +161,7 @@ class LakeStatsSpec extends AnyFunSuite {
   }
 
   test("OPTIMIZE ZORDER tightens per-file bounds: a user_id probe plans fewer files") {
-    val zLake = s"/tmp/graft_lake_test/zopt_${sf.replaceAll("[^A-Za-z0-9.]", "_")}"
+    val zLake = s"$testRoot/zopt"
     // 2 hour partitions, user_id uniform WITHIN each hour → pre-optimize,
     // every hour's single file spans the whole user_id domain and a
     // user_id probe can skip nothing

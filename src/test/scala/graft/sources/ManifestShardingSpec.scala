@@ -17,7 +17,9 @@ import graft.syntax._
   */
 class ManifestShardingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private val base = "/tmp/graft_lake_test/shard_spec"
+  private val testRoot = tempDir("manifest_sharding").toString
+
+  private val base = s"$testRoot/shard_spec"
 
   override def beforeAll(): Unit =
     sys.props("graft.lake.shard.target") = "50"

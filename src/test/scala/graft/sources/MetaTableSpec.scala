@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ManifestFileIndex
 
-import graft.SharedSpark.spark
+import graft.SharedSpark.{spark, tempDir}
 
 /** Iceberg-style metadata tables (`cat.ns.t.files/snapshots/tags/
   * constraints`): manifest-backed LocalScans addressed as an extra
@@ -12,13 +12,15 @@ import graft.SharedSpark.spark
   * files opened.
   */
 class MetaTableSpec extends AnyFunSuite {
+  private val testRoot = tempDir("meta_table").toString
+
   import spark.implicits._
 
   private def rm(f: java.io.File): Unit = {
     Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
   }
 
-  private val wh = "/tmp/graft_lake_test/meta_spec"
+  private val wh = s"$testRoot/meta_spec"
   private val root = s"$wh/default/items"
 
   private def df(ids: Long*) =
@@ -68,7 +70,7 @@ class MetaTableSpec extends AnyFunSuite {
     // — the files table must scan the immutable shard TSVs on executors
     // (r10 verdict: a LocalScan of a multi-million-file inventory is a
     // driver bottleneck and defeats the sharding)
-    val whS = "/tmp/graft_lake_test/meta_spec_sharded"
+    val whS = s"$testRoot/meta_spec_sharded"
     val rootS = s"$whS/default/items"
     rm(new java.io.File(whS))
     ManifestFileIndex.withShardTarget(4) {

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ManifestFileIndex
 
-import graft.SharedSpark.{spark, sf}
+import graft.SharedSpark.{spark, sf, tempDir}
 import graft.operators.Multimodal
 import graft.syntax._
 
@@ -20,7 +20,9 @@ import graft.syntax._
   */
 class MultimodalLakeSpec extends AnyFunSuite {
 
-  private val base = "/tmp/graft_lake_test/multimodal_lake"
+  private val testRoot = tempDir("multimodal_lake").toString
+
+  private val base = s"$testRoot/multimodal_lake"
 
   private def rm(f: java.io.File): Unit = {
     Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()

@@ -3,7 +3,7 @@ package graft.streaming
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.SharedSpark.spark
+import graft.SharedSpark.{spark, tempDir}
 import graft.sources.LakeIO
 import graft.syntax._
 
@@ -14,9 +14,11 @@ import graft.syntax._
   */
 class GraftLakeCdfSpec extends AnyFunSuite {
 
-  private val root = "/tmp/graft_lake_test/cdf_src/events"
-  private val ckpt = "/tmp/graft_lake_test/cdf_src/ckpt"
-  private val out = "/tmp/graft_lake_test/cdf_src/out"
+  private val testRoot = tempDir("graft_lake_cdf").toString
+
+  private val root = s"$testRoot/cdf_src/events"
+  private val ckpt = s"$testRoot/cdf_src/ckpt"
+  private val out = s"$testRoot/cdf_src/out"
 
   private def rm(p: String): Unit = {
     def go(f: java.io.File): Unit = {
@@ -45,7 +47,7 @@ class GraftLakeCdfSpec extends AnyFunSuite {
     // main-head changes while claiming a branch or pinned version) —
     // the MetadataOnlyCount decline-guard invariant applied to the one
     // remaining reader. startingVersion stays the legitimate knob.
-    val root2 = "/tmp/graft_lake_test/cdf_src/branch_refuse"
+    val root2 = s"$testRoot/cdf_src/branch_refuse"
     rm(root2)
     LakeIO.writeLake(batch(0, 10), root2)
     LakeIO.appendToBranch(batch(10, 5), root2, "exp")

@@ -3,7 +3,7 @@ package graft.streaming
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.SharedSpark.spark
+import graft.SharedSpark.{spark, tempDir}
 import graft.sources.LakeIO
 import graft.syntax._
 
@@ -14,9 +14,11 @@ import graft.syntax._
   */
 class GraftLakeStreamSpec extends AnyFunSuite {
 
-  private val root = "/tmp/graft_lake_test/stream_src/events"
-  private val ckpt = "/tmp/graft_lake_test/stream_src/ckpt"
-  private val out = "/tmp/graft_lake_test/stream_src/out"
+  private val testRoot = tempDir("graft_lake_stream").toString
+
+  private val root = s"$testRoot/stream_src/events"
+  private val ckpt = s"$testRoot/stream_src/ckpt"
+  private val out = s"$testRoot/stream_src/out"
 
   private def rm(p: String): Unit = {
     def go(f: java.io.File): Unit = {
@@ -127,7 +129,7 @@ class GraftLakeStreamSpec extends AnyFunSuite {
     // `.option("branch", …)` readStream (branch resolves to stagedAsOf)
     // would silently stream MAIN's commits while claiming to read the
     // branch — the r10 invariant applied to the streaming source.
-    val root2 = "/tmp/graft_lake_test/stream_src/branch_refuse"
+    val root2 = s"$testRoot/stream_src/branch_refuse"
     rm(root2)
     LakeIO.writeLake(batch(0, 10), root2)
     LakeIO.appendToBranch(batch(10, 5), root2, "exp")

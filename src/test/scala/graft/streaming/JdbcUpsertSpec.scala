@@ -3,7 +3,7 @@ package graft.streaming
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
-import graft.SharedSpark.spark
+import graft.SharedSpark.{spark, tempDir}
 import graft.streaming.WeatherPipeline._
 
 /** PK-upsert semantics through a REAL JDBC store (embedded Derby): the
@@ -14,13 +14,15 @@ import graft.streaming.WeatherPipeline._
   * in StreamingSpec; this spec proves the batched-MERGE writer itself.
   */
 class JdbcUpsertSpec extends AnyFunSuite {
+  private val testRoot = tempDir("jdbc_upsert").toString
+
   import spark.implicits._
   implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
   private def ts(s: String) = java.sql.Timestamp.valueOf(s)
 
   private def freshUrl(name: String): String = {
-    val dir = s"/tmp/graft_derby/$name"
+    val dir = s"$testRoot/$name"
     def rm(f: java.io.File): Unit = {
       Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
     }

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-import graft.SharedSpark.{spark, sf}
+import graft.SharedSpark.{spark, sf, tempDir}
 import graft.operators.Similarity
 import graft.sources.Tables
 
@@ -15,6 +15,8 @@ import graft.sources.Tables
   * attempts' orphans.
   */
 class StreamingAnnSpec extends AnyFunSuite {
+  private val testRoot = tempDir("streaming_ann").toString
+
   import spark.implicits._
 
   private def rm(f: java.io.File): Unit = {
@@ -22,7 +24,7 @@ class StreamingAnnSpec extends AnyFunSuite {
   }
 
   test("stream equals rebuild; replays are no-ops; orphan cleanup on recovery") {
-    val base = "/tmp/graft_lake_test/stream_ann"
+    val base = s"$testRoot/stream_ann"
     val dir = s"$base/index"
     val ckpt = s"$base/ckpt"
     rm(new java.io.File(base))
@@ -73,7 +75,7 @@ class StreamingAnnSpec extends AnyFunSuite {
   }
 
   test("compaction folds per-batch files; committed replays stay no-ops; orphans excluded") {
-    val dir = "/tmp/graft_lake_test/stream_ann_compact/index"
+    val dir = s"$testRoot/stream_ann_compact/index"
     rm(new java.io.File(dir).getParentFile)
     val cents = Similarity.annCentroids(spark, sf)
     val all = Tables.embeddings(spark, sf).select($"vec_id", $"embedding")
@@ -111,7 +113,7 @@ class StreamingAnnSpec extends AnyFunSuite {
   }
 
   test("followLake: the dense index tracks lake inserts, MoR deletes AND updates via the CDF") {
-    val base = "/tmp/graft_lake_test/stream_ann_follow"
+    val base = s"$testRoot/stream_ann_follow"
     val lake = s"$base/lake"
     val dir = s"$base/index"
     rm(new java.io.File(base))
@@ -180,7 +182,7 @@ class StreamingAnnSpec extends AnyFunSuite {
   }
 
   test("followLakePq: the streamed IVF-PQ index serves ADC+rerank identical to a full re-encode of the live table") {
-    val base = "/tmp/graft_lake_test/stream_ann_follow_pq"
+    val base = s"$testRoot/stream_ann_follow_pq"
     val lake = s"$base/lake"
     val dir = s"$base/index"
     rm(new java.io.File(base))
@@ -246,7 +248,7 @@ class StreamingAnnSpec extends AnyFunSuite {
   }
 
   test("purging compaction drops deleted vectors: purged index == rebuild over live") {
-    val dir = "/tmp/graft_lake_test/stream_ann_purge/index"
+    val dir = s"$testRoot/stream_ann_purge/index"
     rm(new java.io.File(dir).getParentFile)
     val cents = Similarity.annCentroids(spark, sf)
     val all = Tables.embeddings(spark, sf).select($"vec_id", $"embedding")

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.SharedSpark.spark
+import graft.SharedSpark.{spark, tempDir}
 import graft.sources.LakeIO
 import graft.syntax._
 
@@ -16,9 +16,11 @@ import graft.syntax._
   */
 class StreamingMvSpec extends AnyFunSuite {
 
-  private val root = "/tmp/graft_lake_test/smv/events"
-  private val ckpt = "/tmp/graft_lake_test/smv/ckpt"
-  private val state = "/tmp/graft_lake_test/smv/state"
+  private val testRoot = tempDir("streaming_mv").toString
+
+  private val root = s"$testRoot/smv/events"
+  private val ckpt = s"$testRoot/smv/ckpt"
+  private val state = s"$testRoot/smv/state"
 
   private def rm(p: String): Unit = {
     def go(f: java.io.File): Unit = {

@@ -15,6 +15,8 @@ import graft.sources.Tables
   * and preserves the answer.
   */
 class StreamingPostingsSpec extends AnyFunSuite {
+  private val testRoot = tempDir("streaming_postings").toString
+
   import spark.implicits._
 
   private def rm(f: java.io.File): Unit = {
@@ -35,7 +37,7 @@ class StreamingPostingsSpec extends AnyFunSuite {
   }
 
   test("stream == rebuild at every batch boundary; replay no-op; compaction folds") {
-    val base = "/tmp/graft_lake_test/stream_postings"
+    val base = s"$testRoot/stream_postings"
     val dir = s"$base/index"
     rm(new java.io.File(base))
 
@@ -78,7 +80,7 @@ class StreamingPostingsSpec extends AnyFunSuite {
   }
 
   test("followLake: the index tracks lake inserts AND MoR deletes via the CDF") {
-    val base = "/tmp/graft_lake_test/stream_postings_follow"
+    val base = s"$testRoot/stream_postings_follow"
     val lake = s"$base/lake"
     val dir = s"$base/index"
     rm(new java.io.File(base))
@@ -162,7 +164,7 @@ class StreamingPostingsSpec extends AnyFunSuite {
   }
 
   test("rebucket evolves the postings fan-out; probe identical; appends follow") {
-    val base = "/tmp/graft_lake_test/stream_postings_rebucket"
+    val base = s"$testRoot/stream_postings_rebucket"
     val dir = s"$base/index"
     rm(new java.io.File(base))
     val all = Tables.documents(spark, sf).select($"doc_id", $"text")
@@ -196,7 +198,7 @@ class StreamingPostingsSpec extends AnyFunSuite {
   }
 
   test("rebucket crash recovery: descriptor flips with the layout, never against it") {
-    val dir = "/tmp/graft_lake_test/stream_postings_rebucket_crash/index"
+    val dir = s"$testRoot/stream_postings_rebucket_crash/index"
     rm(new java.io.File(dir).getParentFile)
     val all = Tables.documents(spark, sf).select($"doc_id", $"text")
     StreamingPostings.indexBatch(dir)(all, batchId = 0L)
@@ -244,7 +246,7 @@ class StreamingPostingsSpec extends AnyFunSuite {
   }
 
   test("continuous lifecycle: ingest, churn, DESCRIBE-driven OPTIMIZE, REBUCKET, more churn — probe == rebuild throughout") {
-    val base = "/tmp/graft_lake_test/stream_postings_lifecycle"
+    val base = s"$testRoot/stream_postings_lifecycle"
     val lake = s"$base/lake"
     val dir = s"$base/index"
     rm(new java.io.File(base))
@@ -298,7 +300,7 @@ class StreamingPostingsSpec extends AnyFunSuite {
   }
 
   test("flat-era tombstone layout migrates once at the next write entry; reads never break") {
-    val base = "/tmp/graft_lake_test/stream_postings_flatmig"
+    val base = s"$testRoot/stream_postings_flatmig"
     val lake = s"$base/lake"
     val dir = s"$base/index"
     rm(new java.io.File(base))
@@ -364,7 +366,7 @@ class StreamingPostingsSpec extends AnyFunSuite {
   }
 
   test("purging compaction survives a postings-less index (delete-only history)") {
-    val dir = "/tmp/graft_lake_test/stream_postings_delonly/index"
+    val dir = s"$testRoot/stream_postings_delonly/index"
     rm(new java.io.File(dir).getParentFile)
     // a CDF positioned past the inserts: the first batch carries ONLY
     // deletes — stats + tombstones exist, the postings layout has no
@@ -385,7 +387,7 @@ class StreamingPostingsSpec extends AnyFunSuite {
   }
 
   test("compaction entry sweeps orphaned sibling stage dirs (crashed attempts' disk leak)") {
-    val parent = "/tmp/graft_lake_test/stream_postings_stale"
+    val parent = s"$testRoot/stream_postings_stale"
     val dir = s"$parent/index"
     rm(new java.io.File(parent))
     val all = Tables.documents(spark, sf).select($"doc_id", $"text")
@@ -405,7 +407,7 @@ class StreamingPostingsSpec extends AnyFunSuite {
   }
 
   test("compaction crash recovery: phase-1 rolls back, phase-2 rolls forward") {
-    val dir = "/tmp/graft_lake_test/stream_postings_recover/index"
+    val dir = s"$testRoot/stream_postings_recover/index"
     rm(new java.io.File(dir).getParentFile)
     val all = Tables.documents(spark, sf).select($"doc_id", $"text")
     (0 until 2).foreach { b =>
